@@ -40,7 +40,8 @@ def read_geojson_polygons(spark: SparkSession, path: str) -> DataFrame:
                     idx,
                     feature["properties"]["name"],
                     json.dumps(ring),
-                    min(xs), max(xs), min(ys), max(ys),
+                    float(min(xs)), float(max(xs)),
+                    float(min(ys)), float(max(ys)),
                 )
             )
             idx += 1
