@@ -1,9 +1,10 @@
-"""STAGED round-14 queries — NOT registered (round-14 runway seed).
+"""Parked query slate r14 — NOT registered.
 
-Same contract as staged_r5..r13: LOCAL registry, strict-harness pytest
-coverage in tests/test_staged_r14.py, idempotent ``activate()``.
-Activation order: staged_r9 (round 9) -> ... -> staged_r13 (round 13)
--> this module (round 14). Budget: <= 50 fresh names at activation.
+Builders collect only in the module-local STAGED_QUERIES /
+STAGED_ORACLES dicts: the slow-gated tests/test_staged_r14.py checks
+them against their oracles and tools/gsw_ufunc_ledger.py counts their
+names. Registering one means decorating it with
+``plans.registry.register`` instead of ``_stage``.
 
 Content so far (13 of the 50-name budget):
 
@@ -25,9 +26,9 @@ Content so far (13 of the 50-name budget):
   exact discrete IQRs, and a Gini-gain decision-stump split search
   that reuses ntile_two_pass for its thresholds.
 
-ACTIVATION NOTE (round 14, pre-audited in round 10 via
+REGISTRATION NOTE (round 14, pre-audited in round 10 via
 plan_guards.find_unpartitioned_windows at sf0.001): SEVEN bounded hits
-to allowlist at activation, all bounded-axis shapes —
+to allowlist when registered, all bounded-axis shapes —
 doc_quality_stump_split (bounded candidate-threshold table + scalar
 assembly), events_periodogram_candidates (bounded period alphabet),
 orders_bh_fdr_nation_tests (25-nation p-value table),
@@ -56,19 +57,6 @@ from cioos_siooc_data_transform_spark.session import read_table as _t
 
 STAGED_QUERIES: dict[str, Callable[..., Any]] = {}
 STAGED_ORACLES: dict[str, str] = {}
-
-
-def activate() -> int:
-    """Round-14 activation (idempotent)."""
-    from cioos_siooc_data_transform_spark.plans.registry import ORACLES, QUERIES
-
-    n = 0
-    for name, fn in STAGED_QUERIES.items():
-        if name not in QUERIES:
-            QUERIES[name] = fn
-            ORACLES[name] = STAGED_ORACLES[name]
-            n += 1
-    return n
 
 
 # ---------------------------------------------------------------------------
@@ -520,7 +508,7 @@ _melt_query(
 # and a decision-stump split quality search that reuses the scale-safe
 # ntile operator.
 # ===========================================================================
-def _register(name: str, oracle: str):
+def _stage(name: str, oracle: str):
     def deco(fn):
         STAGED_QUERIES[name] = fn
         STAGED_ORACLES[name] = oracle
@@ -576,7 +564,7 @@ def _bh_oracle() -> str:
     """
 
 
-@_register("orders_bh_fdr_nation_tests", oracle="__LAZY_BH__")
+@_stage("orders_bh_fdr_nation_tests", oracle="__LAZY_BH__")
 def orders_bh_fdr_nation_tests(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benjamini-Hochberg FDR (α = 0.05) over the 25 per-nation
     mean-order-value z-tests — the multiple-comparisons discipline a
@@ -659,7 +647,7 @@ def orders_bh_fdr_nation_tests(spark: SparkSession, sf_dir: str) -> DataFrame:
 STAGED_ORACLES["orders_bh_fdr_nation_tests"] = _bh_oracle()
 
 
-@_register(
+@_stage(
     "part_safety_stock_policy",
     oracle="""
     WITH daily AS (
@@ -734,7 +722,7 @@ def part_safety_stock_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@_stage(
     "orders_kfold_balance_audit",
     oracle="""
     WITH f AS (
@@ -825,7 +813,7 @@ def orders_kfold_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@_stage(
     "lineitem_fd_bin_width",
     oracle="""
     WITH q AS (
@@ -968,7 +956,7 @@ def _stump_oracle() -> str:
     """
 
 
-@_register("doc_quality_stump_split", oracle="__LAZY_STUMP__")
+@_stage("doc_quality_stump_split", oracle="__LAZY_STUMP__")
 def doc_quality_stump_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decision-stump split search: the Gini-impurity gain of
     thresholding n_chars at each inner decile boundary for predicting
@@ -1061,7 +1049,7 @@ STAGED_ORACLES["doc_quality_stump_split"] = _stump_oracle()
 # sweep, exact-dup cluster Zipf slope, quality-score calibration,
 # int4 quantization audit, Fano burstiness, bigram entropy rate.
 # ===========================================================================
-@_register(
+@_stage(
     "mixture_temperature_entropy_sweep",
     oracle="""
     WITH n AS (
@@ -1139,7 +1127,7 @@ def mixture_temperature_entropy_sweep(
     )
 
 
-@_register(
+@_stage(
     "dedup_exact_cluster_size_zipf",
     oracle="""
     WITH cl AS (
@@ -1224,7 +1212,7 @@ def dedup_exact_cluster_size_zipf(
     )
 
 
-@_register(
+@_stage(
     "embedding_int4_quantization_audit",
     oracle="""
     WITH per_vec AS (
@@ -1321,7 +1309,7 @@ def embedding_int4_quantization_audit(
     )
 
 
-@_register(
+@_stage(
     "events_type_fano_factor",
     oracle="""
     WITH span AS (
@@ -1393,7 +1381,7 @@ def events_type_fano_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@_stage(
     "text_bigram_entropy_rate",
     oracle="""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
@@ -1779,7 +1767,7 @@ STAGED_QUERIES["gsw_ct_first_derivatives_wrt_t_exact"] = (
 STAGED_ORACLES["gsw_ct_first_derivatives_wrt_t_exact"] = _ct_derivs_oracle()
 
 
-@_register(
+@_stage(
     "gsw_salinity_star_baseline",
     oracle="""
     SELECT l_orderkey, l_linenumber,
@@ -1823,7 +1811,7 @@ def gsw_salinity_star_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # network, deterministic Poisson-bootstrap CI, candidate-period
 # periodogram, corpus compressibility proxy.
 # ===========================================================================
-@_register(
+@_stage(
     "orders_sens_slope_monthly",
     oracle="""
     WITH m AS (
@@ -1926,7 +1914,7 @@ def _cosupply_oracle() -> str:
     """
 
 
-@_register("supplier_cosupply_topk", oracle="__LAZY_COSUPPLY__")
+@_stage("supplier_cosupply_topk", oracle="__LAZY_COSUPPLY__")
 def supplier_cosupply_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 co-supply pairs: suppliers sharing the most parts in the
     real-shape partsupp relation (the bipartite projection's heaviest
@@ -1962,7 +1950,7 @@ def supplier_cosupply_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 STAGED_ORACLES["supplier_cosupply_topk"] = _cosupply_oracle()
 
 
-@_register(
+@_stage(
     "orders_bootstrap_ci_revenue",
     oracle="""
     WITH reps AS (
@@ -2055,7 +2043,7 @@ def orders_bootstrap_ci_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@_stage(
     "events_periodogram_candidates",
     oracle="""
     WITH periods AS (
@@ -2148,7 +2136,7 @@ def events_periodogram_candidates(
     )
 
 
-@_register(
+@_stage(
     "text_compression_ratio_proxy",
     oracle="""
     WITH w AS (SELECT source, string_split(text, ' ') AS words FROM documents),
@@ -2465,7 +2453,7 @@ STAGED_QUERIES["gsw_enthalpy_first_derivatives_ct_exact"] = (
 STAGED_ORACLES["gsw_enthalpy_first_derivatives_ct_exact"] = _hde_oracle()
 
 
-@_register(
+@_stage(
     "events_erlang_c_staffing",
     oracle="""
     WITH hourly AS (
@@ -2573,7 +2561,7 @@ def events_erlang_c_staffing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@_stage(
     "orders_naive_interval_coverage",
     oracle="""
     WITH m AS (
@@ -2831,7 +2819,7 @@ _SP_BALTIC_SQL = """
 """
 
 
-@_register(
+@_stage(
     "gsw_sp_from_sa_baltic",
     oracle=f"""
     SELECT l_orderkey, l_linenumber,
@@ -2944,7 +2932,7 @@ def _salinometer_stages():
     return stages
 
 
-@_register(
+@_stage(
     "gsw_sp_salinometer",
     oracle="__LAZY_SALINOMETER__",
 )
@@ -3684,7 +3672,7 @@ STAGED_QUERIES["gsw_enthalpy_ct_ct_exact"] = gsw_enthalpy_ct_ct_exact
 STAGED_ORACLES["gsw_enthalpy_ct_ct_exact"] = _hcc_oracle()
 
 
-@_register(
+@_stage(
     "lineitem_sla_commit_receipt_audit",
     oracle="""
     WITH d AS (

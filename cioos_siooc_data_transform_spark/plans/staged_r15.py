@@ -1,9 +1,10 @@
-"""STAGED round-15 queries — NOT registered (round-15 runway seed).
+"""Parked query slate r15 — NOT registered.
 
-Same contract as staged_r5..r14: LOCAL registry, strict-harness pytest
-coverage in tests/test_staged_r15.py, idempotent ``activate()``.
-Activation order: staged_r9 (round 9) -> ... -> staged_r14 (round 14)
--> this module (round 15). Budget: <= 50 fresh names at activation.
+Builders collect only in the module-local STAGED_QUERIES /
+STAGED_ORACLES dicts: the slow-gated tests/test_staged_r15.py checks
+them against their oracles and tools/gsw_ufunc_ledger.py counts their
+names. Registering one means decorating it with
+``plans.registry.register`` instead of ``_stage``.
 
 Content so far:
 
@@ -20,10 +21,10 @@ Content so far:
 - Wave C — LLM-pipeline audits: isotropy, split contamination,
   packing wastage, shard mixing entropy.
 
-ACTIVATION NOTE (round 15): three queries carry a bounded
+REGISTRATION NOTE (round 15): three queries carry a bounded
 unpartitioned window the registry-wide detector will flag — add them
-to tests/test_plans.py::_ALLOWED_UNPARTITIONED_WINDOWS in the
-activation commit: events_turning_points_test (per-DAY rollup),
+to tests/test_plans.py::_ALLOWED_UNPARTITIONED_WINDOWS when
+registering: events_turning_points_test (per-DAY rollup),
 orders_customer_concentration_crk and text_stopword_coverage_curve
 (TakeOrdered(limit=100) results).
 """
@@ -42,19 +43,6 @@ from cioos_siooc_data_transform_spark.session import read_table as _t
 
 STAGED_QUERIES: dict[str, Callable[..., Any]] = {}
 STAGED_ORACLES: dict[str, str] = {}
-
-
-def activate() -> int:
-    """Round-15 activation (idempotent)."""
-    from cioos_siooc_data_transform_spark.plans.registry import ORACLES, QUERIES
-
-    n = 0
-    for name, fn in STAGED_QUERIES.items():
-        if name not in QUERIES:
-            QUERIES[name] = fn
-            ORACLES[name] = STAGED_ORACLES[name]
-            n += 1
-    return n
 
 
 # ===========================================================================
@@ -910,7 +898,7 @@ _gibbs15_query(
 # Wave B — LLM-pipeline audits: isotropy, packing wastage, shard
 # mixing, stopword coverage, second-digit Benford.
 # ===========================================================================
-def _register(name: str, oracle: str):
+def _stage(name: str, oracle: str):
     def deco(fn):
         STAGED_QUERIES[name] = fn
         STAGED_ORACLES[name] = oracle
@@ -919,7 +907,7 @@ def _register(name: str, oracle: str):
     return deco
 
 
-@_register(
+@_stage(
     "embedding_isotropy_score",
     oracle="""
     WITH comp AS (
@@ -988,7 +976,7 @@ def embedding_isotropy_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@_stage(
     "pack_wastage_by_length",
     oracle="""
     WITH d AS (
@@ -1036,7 +1024,7 @@ def pack_wastage_by_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@_stage(
     "shard_mixing_entropy",
     oracle="""
     WITH assign AS (
@@ -1105,7 +1093,7 @@ def shard_mixing_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@_stage(
     "text_stopword_coverage_curve",
     oracle="""
     WITH tok AS (
@@ -1167,7 +1155,7 @@ def text_stopword_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@_stage(
     "orders_benford_second_digit",
     oracle="""
     WITH d AS (
@@ -1246,7 +1234,7 @@ def orders_benford_second_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Wave C — events/time-series battery: interarrival burstiness, hazard
 # profile, turning-points randomness, SES forecast error, Theil-Sen.
 # ===========================================================================
-@_register(
+@_stage(
     "events_interarrival_cv2",
     oracle="""
     WITH g AS (
@@ -1319,7 +1307,7 @@ def events_interarrival_cv2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@_stage(
     "events_hazard_rate_profile",
     oracle="""
     WITH g AS (
@@ -1382,7 +1370,7 @@ def events_hazard_rate_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@_stage(
     "events_turning_points_test",
     oracle="""
     WITH d AS (
@@ -1457,7 +1445,7 @@ def events_turning_points_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Wave D — robust statistics on scale-safe rank machinery + Jaccard
 # link prediction.
 # ===========================================================================
-@_register(
+@_stage(
     "orders_theil_sen_monthly",
     oracle="""
     WITH m AS (
@@ -1542,7 +1530,7 @@ def orders_theil_sen_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@_stage(
     "customer_mad_robust_outliers",
     oracle="""
     WITH rev AS (
@@ -1655,7 +1643,7 @@ def customer_mad_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@_stage(
     "part_brand_price_kruskal",
     oracle="""
     WITH x AS (
@@ -1782,7 +1770,7 @@ def part_brand_price_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@_stage(
     "graph_jaccard_linkpred",
     oracle="""
     WITH e AS (
@@ -1877,7 +1865,7 @@ def graph_jaccard_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PI_LIT = "3.141592653589793e0"
 
 
-@_register(
+@_stage(
     "events_spectral_entropy",
     oracle=f"""
     WITH d AS (
@@ -1979,7 +1967,7 @@ def events_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@_stage(
     "lineitem_qty_discount_mutual_info",
     oracle="""
     WITH cell AS (
@@ -2045,7 +2033,7 @@ def lineitem_qty_discount_mutual_info(
     )
 
 
-@_register(
+@_stage(
     "embedding_dim_kurtosis",
     oracle="""
     WITH x AS (
@@ -2120,7 +2108,7 @@ def embedding_dim_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@_stage(
     "doc_length_lognormal_ks",
     oracle="""
     WITH lx AS (
@@ -2240,7 +2228,7 @@ def doc_length_lognormal_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # Wave F — session/grouped-quantile/QQ/dedup-histogram/packing audits.
 # ===========================================================================
-@_register(
+@_stage(
     "events_session_length_powerlaw",
     oracle="""
     WITH e AS (
@@ -2340,7 +2328,7 @@ def events_session_length_powerlaw(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@_register(
+@_stage(
     "supplier_balance_quartiles_by_nation",
     oracle="""
     WITH s AS (
@@ -2401,7 +2389,7 @@ def supplier_balance_quartiles_by_nation(
     )
 
 
-@_register(
+@_stage(
     "orders_interarrival_exponential_qq",
     oracle="""
     WITH g AS (
@@ -2500,7 +2488,7 @@ def orders_interarrival_exponential_qq(
     )
 
 
-@_register(
+@_stage(
     "dedup_pair_jaccard_histogram",
     oracle="""
     WITH 
@@ -2583,7 +2571,7 @@ def dedup_pair_jaccard_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
 
 
-@_register(
+@_stage(
     "chunk_boundary_word_audit",
     oracle="""
     WITH d AS (
@@ -2641,7 +2629,7 @@ def chunk_boundary_word_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # Wave G — product/growth metrics and corpus-novelty audits.
 # ===========================================================================
-@_register(
+@_stage(
     "events_dau_wau_stickiness",
     oracle="""
     WITH dau AS (
@@ -2695,7 +2683,7 @@ def events_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@_stage(
     "customer_repeat_interval_trend",
     oracle="""
     WITH seq AS (
@@ -2785,7 +2773,7 @@ def customer_repeat_interval_trend(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@_register(
+@_stage(
     "doc_ngram_novelty_curve",
     oracle="""
     WITH d AS (
@@ -2858,7 +2846,7 @@ def doc_ngram_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@_stage(
     "orders_customer_concentration_crk",
     oracle="""
     WITH rev AS (
@@ -2923,7 +2911,7 @@ def orders_customer_concentration_crk(
 # Wave H — growth decomposition, dedup source confusion, acquisition
 # split, frequency-spectrum classes.
 # ===========================================================================
-@_register(
+@_stage(
     "orders_gmv_mix_shift_decomposition",
     oracle="""
     WITH y AS (
@@ -2991,7 +2979,7 @@ def orders_gmv_mix_shift_decomposition(
     )
 
 
-@_register(
+@_stage(
     "doc_exact_dup_source_confusion",
     oracle="""
     WITH g AS (
@@ -3036,7 +3024,7 @@ def doc_exact_dup_source_confusion(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@_register(
+@_stage(
     "orders_acquisition_retention_gmv_split",
     oracle="""
     WITH first_o AS (
@@ -3083,7 +3071,7 @@ def orders_acquisition_retention_gmv_split(
     )
 
 
-@_register(
+@_stage(
     "text_freq_spectrum_classes",
     oracle="""
     WITH tok AS (
@@ -3171,7 +3159,7 @@ def text_freq_spectrum_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Wave I — final stretch to the 50-name budget: grouped fact-table
 # quantiles, ML-eval audits, robust two-way decomposition, profile QC.
 # ===========================================================================
-@_register(
+@_stage(
     "lineitem_shipmode_delay_quantiles",
     oracle="""
     WITH d AS (
@@ -3251,7 +3239,7 @@ def lineitem_shipmode_delay_quantiles(
     )
 
 
-@_register(
+@_stage(
     "embedding_label_silhouette_proxy",
     oracle="""
     WITH v AS (
@@ -3378,7 +3366,7 @@ def embedding_label_silhouette_proxy(
     )
 
 
-@_register(
+@_stage(
     "similarity_topk_margin_audit",
     oracle="""
     WITH q AS (
@@ -3433,7 +3421,7 @@ def similarity_topk_margin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@_stage(
     "events_peak_concentration_herfindahl",
     oracle="""
     WITH h AS (
@@ -3480,7 +3468,7 @@ def events_peak_concentration_herfindahl(
     )
 
 
-@_register(
+@_stage(
     "events_intervisit_bowley_skew",
     oracle="""
     WITH g AS (
@@ -3568,7 +3556,7 @@ def events_intervisit_bowley_skew(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@_register(
+@_stage(
     "dedup_candidate_precision_at_threshold",
     oracle="""
     WITH 
@@ -3664,7 +3652,7 @@ def dedup_candidate_precision_at_threshold(
     )
 
 
-@_register(
+@_stage(
     "customer_cohort_decay_halflife",
     oracle="""
     WITH first_o AS (
@@ -3756,7 +3744,7 @@ def customer_cohort_decay_halflife(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@_register(
+@_stage(
     "gsw_density_inversion_audit",
     oracle="""
     WITH lv AS (
@@ -3829,7 +3817,7 @@ def gsw_density_inversion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@_stage(
     "embedding_hubness_audit",
     oracle="""
     WITH q AS (
@@ -3882,7 +3870,7 @@ def embedding_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@_stage(
     "orders_median_polish_residuals",
     oracle="""
     WITH cell AS (

@@ -1,13 +1,8 @@
-"""Round-5 query slate — staged through round 4, LIVE since round 5.
+"""Query slate r5: registered queries, grouped in waves.
 
-These 50 queries were built and tri-scale-verified during round 4 but
-parked in a local registry so round 4's fresh-name count stayed at the
-driver's 50-query sample budget (the round-3 defect class; see
-tests/test_entry_contract.py::test_fresh_budget_within_driver_sample).
-Round 5 activated them: plans/__init__.py imports this module and calls
-``activate()``, which pushes every entry into the live registry, and the
-50 round-4-green names moved to ``_CHECKED`` in __spark_entry__.py in
-the same change — so the driver's round-5 sample is exactly this slate.
+Each builder registers itself with ``plans.registry.register`` when
+plans/__init__.py imports this module; tests/test_staged_r5.py runs
+every one against its oracle through the strict harness.
 
 Content:
 - EOS-80 high-pressure density (UNESCO 1983 secant bulk modulus; check
@@ -51,32 +46,14 @@ Zipf slope.
 Wave 16: kappa compressibility (rho*c^2*kappa = 1 identity); Heaps'
 law fit; Gini concentration; Simpson diversity.
 
-Organization note (round 5): the module deliberately stays ONE file
-rather than splitting into per-family modules — it is now live registry
-code whose query names anchor CORRECTNESS tracking across rounds, the
-waves give it the same family grouping a split would, and the only
-cross-family sharing worth extracting (the shingle/minhash/LSH CTE
-bank) lives in plans/dedup_queries.py where every module imports it.
-
-The round-4 intentional duplication was hoisted at activation (the
-cleanup the staging plan scheduled): dedup_bag_jaccard_pairs and
-dedup_bbit_minhash now build on the SHARED shingle/minhash/LSH CTE bank
-(_SHINGLES_CTE/_LSH_CAND_CTES from plans/dedup_queries.py, Spark side
-via distinct_shingles + lsh_band_buckets — the private band encoding
-was equivalent but not byte-identical, so aligning it changed bucket
-strings without changing any candidate pair), and the funnel/histogram
-oracles share CONFIRMED_COMPONENT_CTES instead of duplicating the
-components walk.
-
-The slate holds EXACTLY 50 queries — one full driver sample: round 5
-can promote the 50 round-4-green names to _CHECKED, activate() this
-module, and the driver's next sample covers the entire new surface.
+dedup_bag_jaccard_pairs and dedup_bbit_minhash build on the shared
+shingle/minhash/LSH CTE bank (_SHINGLES_CTE/_LSH_CAND_CTES from
+plans/dedup_queries.py; Spark side distinct_shingles +
+lsh_band_buckets), and the funnel/histogram oracles share
+CONFIRMED_COMPONENT_CTES instead of duplicating the components walk.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
-from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -88,25 +65,13 @@ from cioos_siooc_data_transform_spark.plans.dedup_queries import (
     _SHINGLES_CTE,
     distinct_shingles,
 )
+from cioos_siooc_data_transform_spark.plans.registry import register
 from cioos_siooc_data_transform_spark.session import read_table as _t
-
-STAGED_QUERIES: dict[str, Callable[..., Any]] = {}
-STAGED_ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str):
-    def deco(fn):
-        STAGED_QUERIES[name] = fn
-        STAGED_ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------
 # Shared synthetic oceanographic inputs (same derivation as
-# plans/oceanography_queries.py so staged queries join that family
-# unchanged on activation).
+# plans/oceanography_queries.py).
 # ---------------------------------------------------------------------------
 _IN_SQL = """
     SELECT l_orderkey, l_linenumber,
@@ -126,6 +91,17 @@ def _inputs(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(30.0) + F.col("l_discount") * 50).cast("double").alias("s"),
         (F.col("l_linenumber") * 100.0).cast("double").alias("p"),
     )
+
+
+def _stage_sql(inner_sql: str, stages: list[tuple[str, str]]) -> str:
+    """Fold (name, expr) stages into nested SELECTs — the oracle-side
+    twin of a Spark withColumn chain. Each stage's expression references
+    earlier stages BY NAME, so both engines evaluate each intermediate
+    once and the SQL text stays linear in the stage count."""
+    q = f"({inner_sql})"
+    for name, expr in stages:
+        q = f"(SELECT *, {expr} AS {name} FROM {q})"
+    return q
 
 
 # ---------------------------------------------------------------------------
@@ -178,7 +154,7 @@ def rho_eos80_sql(s: str, t: str, p_dbar: str) -> str:
     )
 
 
-@_register(
+@register(
     "gsw_rho_at_pressure",
     oracle=f"""
     SELECT l_orderkey, l_linenumber,
@@ -209,7 +185,7 @@ from cioos_siooc_data_transform_spark.functions.oceanography import (  # noqa: E
 )
 
 
-@_register(
+@register(
     "gsw_adiabatic_lapse_rate",
     oracle=f"""
     SELECT l_orderkey, l_linenumber,
@@ -254,7 +230,7 @@ def _sigma_oracle() -> str:
     """
 
 
-@_register("gsw_sigma1_sigma2", oracle="__LAZY__")
+@register("gsw_sigma1_sigma2", _sigma_oracle())
 def gsw_sigma1_sigma2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Potential density anomalies referenced to 1000 and 2000 dbar from
     the 75-term TEOS-10 polynomial (the density surfaces intermediate-
@@ -281,15 +257,12 @@ def gsw_sigma1_sigma2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_sigma1_sigma2"] = _sigma_oracle()
-
-
 # ---------------------------------------------------------------------------
 # Window value functions: first/last/nth over explicit frames — the one
 # window family (rank/lag-lead/range-frame/percent already ship) without
 # a registered query.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "window_value_functions",
     oracle="""
     SELECT o_orderkey, o_custkey,
@@ -344,7 +317,7 @@ def window_value_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pairs (the full-width LSH stage is unchanged; the b-bit signatures are
 # the storage/transfer optimization).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "dedup_bbit_minhash",
     oracle=f"""
     WITH {_SHINGLES_CTE},
@@ -423,7 +396,7 @@ def dedup_bbit_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the standard multilingual-tokenizer-quality metric (fertility >> 1
 # means the vocabulary underserves that language).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "tokenizer_fertility",
     oracle=r"""
     SELECT lang,
@@ -470,7 +443,7 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STOPWORDS = ["a", "the", "and", "of", "to", "in"]
 
 
-@_register(
+@register(
     "text_stopword_density",
     oracle=f"""
     WITH w AS (
@@ -516,7 +489,7 @@ def text_stopword_density(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Session duration / size stats: the session-level rollup over the
 # sessionize_gap assignment (30-minute idle timeout).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "session_duration_stats",
     oracle="""
     WITH e AS (
@@ -574,7 +547,7 @@ def session_duration_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FUNNEL = ["view", "click", "purchase"]
 
 
-@_register(
+@register(
     "funnel_conversion_rates",
     oracle="""
     WITH reached AS (
@@ -675,7 +648,7 @@ def _sigma_theta_oracle() -> str:
     """
 
 
-@_register("gsw_potential_density_theta", oracle="__LAZY__")
+@register("gsw_potential_density_theta", _sigma_theta_oracle())
 def gsw_potential_density_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sigma_theta = rho_EOS80(S, theta, 0) - 1000: surface-referenced
     potential density through the Bryden theta polynomial. theta is
@@ -697,9 +670,6 @@ def gsw_potential_density_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_potential_density_theta"] = _sigma_theta_oracle()
-
-
 # ---------------------------------------------------------------------------
 # Model-based quality filtering (the FineWeb-Edu / quality-classifier
 # shape): a literal logistic-regression over cheap per-doc features.
@@ -710,7 +680,7 @@ STAGED_ORACLES["gsw_potential_density_theta"] = _sigma_theta_oracle()
 _LR_W = {"bias": -1.5, "chars": 0.004, "stop": 3.0, "fert": -0.8}
 
 
-@_register(
+@register(
     "quality_classifier_logreg",
     oracle=f"""
     WITH feats AS (
@@ -781,7 +751,7 @@ def quality_classifier_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # standard embedding-space sanity eval (a collapsed or shuffled
 # embedding fails it immediately).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "embedding_knn_label_accuracy",
     oracle="""
     WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv, label AS true_label
@@ -864,7 +834,7 @@ def embedding_knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the FIRST time in the corpus (by doc_id order) — the curation metric
 # behind "how much new content does this source add".
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "ngram_novelty_score",
     oracle="""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
@@ -923,7 +893,7 @@ def ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # deleted / changed / unchanged / added and report exact integer-cent
 # price deltas — the maintenance op behind incremental republishing.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "snapshot_diff_cdc",
     oracle="""
     WITH base AS (
@@ -1010,7 +980,7 @@ def snapshot_diff_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # window surface the numeric range-frame query doesn't cover (frame
 # bounds in INTERVAL units over a timestamp ordering).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "window_time_interval_frame",
     oracle="""
     SELECT event_id, user_id,
@@ -1054,7 +1024,7 @@ def window_time_interval_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 # grouping-sets family (which aggregation level produced this row) —
 # what BI layers pivot on.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "grouping_id_flags",
     oracle="""
     SELECT o_orderstatus, o_orderpriority,
@@ -1096,7 +1066,7 @@ def grouping_id_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tables are vocabulary-bounded and broadcast; the corpus never
 # shuffles on a token key.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "lm_bigram_logprob",
     oracle="""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
@@ -1159,7 +1129,7 @@ def lm_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Per-source dedup survivorship report: the ops dashboard behind every
 # dedup pipeline (which sources are mostly copies?).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "dedup_source_survivorship",
     oracle="""
     SELECT source,
@@ -1191,7 +1161,7 @@ def dedup_source_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
 # by the same user within +/-900 s, backward preferred on exact
 # distance ties. Union + two windows — no range-pair explosion.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "asof_nearest_tolerance",
     oracle="""
     WITH u AS (
@@ -1305,7 +1275,52 @@ _PR_ITERS = 3
 _PR_UNIT = 1_000_000_000_000  # 1e12 score units
 
 
-@_register("graph_pagerank_iterations", oracle="__LAZY__")
+def _pagerank_oracle() -> str:
+    base = f"""
+    items AS (
+      SELECT DISTINCT l_orderkey AS k, l_partkey AS pk FROM lineitem
+    ), pairs AS (
+      SELECT a.pk AS pa, b.pk AS pb
+      FROM items a JOIN items b ON a.k = b.k AND a.pk < b.pk
+    ), und AS (
+      SELECT pa, pb FROM pairs GROUP BY pa, pb HAVING count(*) >= 2
+    ), edges AS (
+      SELECT pa AS src, pb AS dst FROM und
+      UNION ALL
+      SELECT pb, pa FROM und
+    ), deg AS (
+      SELECT src, CAST(count(*) AS BIGINT) AS outdeg FROM edges GROUP BY src
+    ), n AS (
+      SELECT CAST(count(*) AS BIGINT) AS n_nodes FROM deg
+    ), it0 AS (
+      SELECT src AS node, {_PR_UNIT} // n.n_nodes AS score FROM deg, n
+    )"""
+    its = []
+    for i in range(1, _PR_ITERS + 1):
+        its.append(f""", it{i} AS (
+      SELECT d.src AS node,
+             (15 * ({_PR_UNIT} // n.n_nodes)) // 100
+             + (85 * COALESCE(x.inc, 0)) // 100 AS score
+      FROM deg d
+      CROSS JOIN n
+      LEFT JOIN (
+        SELECT e.dst, sum(s.score // dg.outdeg) AS inc
+        FROM it{i-1} s
+        JOIN deg dg ON dg.src = s.node
+        JOIN edges e ON e.src = s.node
+        GROUP BY e.dst
+      ) x ON x.dst = d.src
+    )""")
+    return (
+        "WITH " + base + "".join(its)
+        + f"""
+    SELECT node AS part_key, CAST(score AS BIGINT) AS pagerank_picos
+    FROM it{_PR_ITERS}
+    """
+    )
+
+
+@register("graph_pagerank_iterations", _pagerank_oracle())
 def graph_pagerank_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """{iters}-iteration PageRank (d=0.85) on the support->=2
     co-purchase graph. Integer 1e-12-unit scores make the iteration
@@ -1397,54 +1412,6 @@ def graph_pagerank_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pagerank_oracle() -> str:
-    base = f"""
-    items AS (
-      SELECT DISTINCT l_orderkey AS k, l_partkey AS pk FROM lineitem
-    ), pairs AS (
-      SELECT a.pk AS pa, b.pk AS pb
-      FROM items a JOIN items b ON a.k = b.k AND a.pk < b.pk
-    ), und AS (
-      SELECT pa, pb FROM pairs GROUP BY pa, pb HAVING count(*) >= 2
-    ), edges AS (
-      SELECT pa AS src, pb AS dst FROM und
-      UNION ALL
-      SELECT pb, pa FROM und
-    ), deg AS (
-      SELECT src, CAST(count(*) AS BIGINT) AS outdeg FROM edges GROUP BY src
-    ), n AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_nodes FROM deg
-    ), it0 AS (
-      SELECT src AS node, {_PR_UNIT} // n.n_nodes AS score FROM deg, n
-    )"""
-    its = []
-    for i in range(1, _PR_ITERS + 1):
-        its.append(f""", it{i} AS (
-      SELECT d.src AS node,
-             (15 * ({_PR_UNIT} // n.n_nodes)) // 100
-             + (85 * COALESCE(x.inc, 0)) // 100 AS score
-      FROM deg d
-      CROSS JOIN n
-      LEFT JOIN (
-        SELECT e.dst, sum(s.score // dg.outdeg) AS inc
-        FROM it{i-1} s
-        JOIN deg dg ON dg.src = s.node
-        JOIN edges e ON e.src = s.node
-        GROUP BY e.dst
-      ) x ON x.dst = d.src
-    )""")
-    return (
-        "WITH " + base + "".join(its)
-        + f"""
-    SELECT node AS part_key, CAST(score AS BIGINT) AS pagerank_picos
-    FROM it{_PR_ITERS}
-    """
-    )
-
-
-STAGED_ORACLES["graph_pagerank_iterations"] = _pagerank_oracle()
-
-
 # ===========================================================================
 # Staged wave 4
 # ===========================================================================
@@ -1460,7 +1427,7 @@ STAGED_ORACLES["graph_pagerank_iterations"] = _pagerank_oracle()
 _PIT_PROBES = ["1994-06-01", "1997-01-01", "2005-06-01"]
 
 
-@_register(
+@register(
     "scd2_point_in_time_lookup",
     oracle=f"""
     WITH hist AS (
@@ -1602,7 +1569,7 @@ def scd2_point_in_time_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # LSH chain; only Σmin needs the pairwise join (Σmax derives from the
 # per-doc totals: |A| + |B| − Σmin).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "dedup_bag_jaccard_pairs",
     oracle=f"""
     WITH {_SHINGLES_CTE},
@@ -1692,7 +1659,7 @@ def dedup_bag_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # squares), then a row-local standardized distance — the scale-aware
 # upgrade of embedding_centroid_distance for embedding-space QC.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "embedding_mahalanobis_diag",
     oracle="""
     WITH v AS (
@@ -1807,7 +1774,7 @@ def embedding_mahalanobis_diag(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ARES_K = 200
 
 
-@_register(
+@register(
     "weighted_sample_ares",
     oracle=f"""
     WITH keyed AS (
@@ -1863,7 +1830,7 @@ def weighted_sample_ares(spark: SparkSession, sf_dir: str) -> DataFrame:
 # match) with (b) the real join over the non-NULL remainder — same
 # answer, no NULL hot partition. The oracle is the plain LEFT JOIN.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "left_join_null_skew_isolated",
     oracle="""
     WITH f AS (
@@ -1910,7 +1877,7 @@ def left_join_null_skew_isolated(spark: SparkSession, sf_dir: str) -> DataFrame:
 # multiplicities (the distinct variants already ship). Results grouped
 # to (part_key, n) rows and tagged so one query exercises both.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "except_intersect_all",
     oracle="""
     WITH a AS (SELECT l_partkey FROM lineitem WHERE l_quantity < 25),
@@ -1973,7 +1940,7 @@ def _component_histogram_oracle() -> str:
     """
 
 
-@_register("dedup_component_size_histogram", oracle="__LAZY__")
+@register("dedup_component_size_histogram", _component_histogram_oracle())
 def dedup_component_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution of near-dup cluster sizes from the confirmed-pair
     component labeling (>= 0.5 exact Jaccard over LSH candidates).
@@ -2007,9 +1974,6 @@ def dedup_component_size_histogram(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-STAGED_ORACLES["dedup_component_size_histogram"] = _component_histogram_oracle()
-
-
 # ===========================================================================
 # Staged wave 6
 # ===========================================================================
@@ -2025,7 +1989,7 @@ STAGED_ORACLES["dedup_component_size_histogram"] = _component_histogram_oracle()
 _FREQ_SUPPORT = 0.05
 
 
-@_register(
+@register(
     "sketch_frequent_items",
     oracle=f"""
     WITH counts AS (
@@ -2085,7 +2049,7 @@ def sketch_frequent_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 # whitespace, strip non-alphanumerics — catches trivially-reformatted
 # copies that byte-exact digests miss.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "dedup_exact_normalized",
     oracle="""
     WITH norm AS (
@@ -2135,7 +2099,7 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WM_DELAY_S = 600
 
 
-@_register(
+@register(
     "late_data_accounting",
     oracle=f"""
     WITH seq AS (
@@ -2194,24 +2158,6 @@ def late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def activate() -> int:
-    """Round-5 activation: push every staged query into the LIVE
-    registry. Call from plans/__init__.py AFTER the module imports
-    (``from ... import staged_r5; staged_r5.activate()``) — and add the
-    50 round-4-green names to ``_CHECKED`` in __spark_entry__.py in the
-    SAME change, or the fresh-budget contract test fails the build.
-    Returns the number of queries registered (idempotent)."""
-    from cioos_siooc_data_transform_spark.plans.registry import ORACLES, QUERIES
-
-    n = 0
-    for name, fn in STAGED_QUERIES.items():
-        if name not in QUERIES:
-            QUERIES[name] = fn
-            ORACLES[name] = STAGED_ORACLES[name]
-            n += 1
-    return n
-
-
 # ===========================================================================
 # Staged wave 7
 # ===========================================================================
@@ -2226,13 +2172,13 @@ from cioos_siooc_data_transform_spark.functions.teos10 import (  # noqa: E402
 )
 
 
-@_register("gsw_dynamic_enthalpy", oracle="__LAZY__")
 def gsw_dynamic_enthalpy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic enthalpy (the pressure-dependent part of specific
-    enthalpy; enthalpy = cp0*CT + h_dyn). Plain 75-term sum — identical
-    literal arithmetic on both engines, left-to-right in sorted
-    coefficient order; values O(1e3) J/kg so 6-dp rounding is far above
-    double noise. Zero shuffle, pure codegen."""
+    enthalpy; enthalpy = cp0*CT + h_dyn) as the flat 75-term sum.
+    Unregistered: the flat text exceeds janino's 64 KB method limit and
+    runs interpreted, so the registry serves the staged-Horner form
+    below; this builder stays as its value reference in
+    tests/test_staged_r9.py."""
     from cioos_siooc_data_transform_spark.functions.teos10 import ct_from_t_sql
 
     df = _inputs(spark, sf_dir)
@@ -2250,21 +2196,56 @@ def gsw_dynamic_enthalpy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dyn_enthalpy_oracle() -> str:
-    from cioos_siooc_data_transform_spark.functions.teos10 import ct_from_t_sql
+# ---------------------------------------------------------------------------
+# Staged-Horner dynamic enthalpy — the registered form. The tree regroups
+# per z-power so codegen survives janino's 64 KB method limit (measured
+# 5.4 s -> ~0.5 s at sf0.1 for one evaluation); values match the flat
+# form above at the 6-dp output floor.
+# ---------------------------------------------------------------------------
+def _dyn_enthalpy_staged_oracle() -> str:
+    from cioos_siooc_data_transform_spark.functions.teos10 import (
+        ct_from_t_sql,
+        dynamic_enthalpy_stages,
+    )
 
-    return f"""
-    SELECT l_orderkey, l_linenumber,
-           round({dynamic_enthalpy_sql("sa", "ct", "p")}, 6) AS h_dyn
-    FROM (
+    inner = f"""
       SELECT l_orderkey, l_linenumber, p, {_SA_SQL} AS sa,
              {ct_from_t_sql("s", "t", "p")} AS ct
       FROM ({_IN_SQL})
-    )
+    """
+    staged = _stage_sql(inner, dynamic_enthalpy_stages("sa", "ct", "p"))
+    return f"""
+    SELECT l_orderkey, l_linenumber,
+           round(__hdyn_out, 6) AS h_dyn
+    FROM {staged}
     """
 
 
-STAGED_ORACLES["gsw_dynamic_enthalpy"] = _dyn_enthalpy_oracle()
+@register("gsw_dynamic_enthalpy", _dyn_enthalpy_staged_oracle())
+def gsw_dynamic_enthalpy_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dynamic enthalpy (the pressure-dependent part of specific
+    enthalpy) — staged per-z-power form of the same 75 published
+    coefficients the flat gsw_dynamic_enthalpy above sums;
+    one a_K stage set + Horner combine per row, whole-stage codegen."""
+    from cioos_siooc_data_transform_spark.functions.teos10 import (
+        ct_from_t_sql,
+        dynamic_enthalpy_stages,
+    )
+
+    df = _inputs(spark, sf_dir).select(
+        "l_orderkey",
+        "l_linenumber",
+        "p",
+        F.expr(_SA_SQL).alias("sa"),
+        F.expr(ct_from_t_sql("s", "t", "p")).alias("ct"),
+    )
+    for name, expr in dynamic_enthalpy_stages("sa", "ct", "p"):
+        df = df.withColumn(name, F.expr(expr))
+    return df.select(
+        "l_orderkey",
+        "l_linenumber",
+        F.round(F.col("__hdyn_out"), 6).alias("h_dyn"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2282,7 +2263,7 @@ _TB_REFILL = 1       # millitokens per second (full token after 1000 s)
 _TB_COST = 1000      # millitokens per event
 
 
-@_register(
+@register(
     "rate_limit_token_bucket",
     oracle=f"""
     WITH RECURSIVE e AS (
@@ -2407,7 +2388,7 @@ def _langid_confusion_oracle() -> str:
     """
 
 
-@_register("langid_confusion_matrix", oracle="__LAZY__")
+@register("langid_confusion_matrix", _langid_confusion_oracle())
 def langid_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(true lang x predicted lang) counts plus the per-true-lang row
     fraction (recall on the diagonal) — the eval artifact behind every
@@ -2442,9 +2423,6 @@ def langid_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["langid_confusion_matrix"] = _langid_confusion_oracle()
-
-
 # ---------------------------------------------------------------------------
 # Reference-vertical integration: Mackenzie sound speed computed over
 # the PARSED IOS profile — the full chain (mapInPandas parse → pad
@@ -2453,7 +2431,7 @@ STAGED_ORACLES["langid_confusion_matrix"] = _langid_confusion_oracle()
 # fixture's literal values, so the parse, the masking, AND the formula
 # are all on the hook.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "ios_profile_sound_speed",
     oracle="""
     WITH rec AS (
@@ -2520,7 +2498,7 @@ def ios_profile_sound_speed(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WIN_W = 4  # window of consecutive 3-gram hashes
 
 
-@_register(
+@register(
     "dedup_fingerprint_winnowing",
     oracle=f"""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
@@ -2602,7 +2580,7 @@ def dedup_fingerprint_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # A/B test lift: deterministic hash split, exact per-arm conversion
 # counts, and the relative lift — the experiment-analysis primitive.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "ab_test_lift",
     oracle="""
     WITH arms AS (
@@ -2698,10 +2676,10 @@ def ab_test_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Full specific enthalpy h = cp0*CT + h_dyn — the quantity TEOS-10
 # conserves under adiabatic mixing (the whole point of CT).
 # ---------------------------------------------------------------------------
-@_register("gsw_enthalpy", oracle="__LAZY__")
 def gsw_enthalpy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """h(SA, CT, p) = cp0*CT + dynamic enthalpy; completes the enthalpy
-    pair (both terms already derivative- or check-value-pinned)."""
+    """h(SA, CT, p) = cp0*CT + dynamic enthalpy as the flat 75-term sum.
+    Unregistered value reference for the staged-Horner form below (see
+    gsw_dynamic_enthalpy)."""
     from cioos_siooc_data_transform_spark.functions.teos10 import (
         GSW_CP0,
         _lit,
@@ -2722,26 +2700,48 @@ def gsw_enthalpy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _enthalpy_oracle() -> str:
+def _enthalpy_staged_oracle() -> str:
     from cioos_siooc_data_transform_spark.functions.teos10 import (
-        GSW_CP0,
-        _lit,
         ct_from_t_sql,
+        enthalpy_stages,
     )
 
-    return f"""
-    SELECT l_orderkey, l_linenumber,
-           round({_lit(GSW_CP0)}*ct + {dynamic_enthalpy_sql("sa", "ct", "p")}, 6)
-             AS enthalpy
-    FROM (
+    inner = f"""
       SELECT l_orderkey, l_linenumber, p, {_SA_SQL} AS sa,
              {ct_from_t_sql("s", "t", "p")} AS ct
       FROM ({_IN_SQL})
-    )
+    """
+    staged = _stage_sql(inner, enthalpy_stages("sa", "ct", "p"))
+    return f"""
+    SELECT l_orderkey, l_linenumber,
+           round(__h_out, 6) AS enthalpy
+    FROM {staged}
     """
 
 
-STAGED_ORACLES["gsw_enthalpy"] = _enthalpy_oracle()
+@register("gsw_enthalpy", _enthalpy_staged_oracle())
+def gsw_enthalpy_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """h(SA, CT, p) = cp0·CT + h_dyn — staged per-z-power form (see
+    gsw_dynamic_enthalpy_staged)."""
+    from cioos_siooc_data_transform_spark.functions.teos10 import (
+        ct_from_t_sql,
+        enthalpy_stages,
+    )
+
+    df = _inputs(spark, sf_dir).select(
+        "l_orderkey",
+        "l_linenumber",
+        "p",
+        F.expr(_SA_SQL).alias("sa"),
+        F.expr(ct_from_t_sql("s", "t", "p")).alias("ct"),
+    )
+    for name, expr in enthalpy_stages("sa", "ct", "p"):
+        df = df.withColumn(name, F.expr(expr))
+    return df.select(
+        "l_orderkey",
+        "l_linenumber",
+        F.round(F.col("__h_out"), 6).alias("enthalpy"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2755,7 +2755,7 @@ _WIN_MAX_DF = 10
 _WIN_MIN_SHARED = 2
 
 
-@_register(
+@register(
     "dedup_winnowing_pairs",
     oracle=f"""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
@@ -2841,7 +2841,7 @@ def dedup_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # repeat join on the key into a local merge. Plan pinned Exchange-free
 # below the join in tests/test_staged_r5.py.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "bucketed_colocated_join",
     oracle="""
     SELECT c.c_mktsegment,
@@ -2883,7 +2883,7 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Day-of-week seasonality profile: the additive-decomposition base
 # table (weekly seasonal means + residual spread) for event values.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "events_dow_seasonality",
     oracle="""
     WITH q AS (
@@ -2935,7 +2935,7 @@ def events_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # where the naive days x orders stabbing join is quadratic; THE scale
 # pattern for concurrency/backlog/occupancy questions.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "interval_sweepline_backlog",
     oracle="""
     WITH iv AS (
@@ -3031,7 +3031,21 @@ def _sound_speed_ct_sql(sa: str, ct: str, p: str) -> str:
     return f"(1.0e4*{v}*sqrt(-1.0e0/{dz}))"
 
 
-@_register("gsw_sound_speed_ct_native", oracle="__LAZY__")
+def _sound_speed_ct_oracle() -> str:
+    from cioos_siooc_data_transform_spark.functions.teos10 import ct_from_t_sql
+
+    return f"""
+    SELECT l_orderkey, l_linenumber,
+           round({_sound_speed_ct_sql("sa", "ct", "p")}, 6) AS sound_speed_ct
+    FROM (
+      SELECT l_orderkey, l_linenumber, p, {_SA_SQL} AS sa,
+             {ct_from_t_sql("s", "t", "p")} AS ct
+      FROM ({_IN_SQL})
+    )
+    """
+
+
+@register("gsw_sound_speed_ct_native", _sound_speed_ct_oracle())
 def gsw_sound_speed_ct_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sound speed from c^2 = dp/drho = -v^2/(dv/dP): both factors are
     plain sums over the check-valued coefficient table, so correctness
@@ -3058,23 +3072,6 @@ def gsw_sound_speed_ct_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sound_speed_ct_oracle() -> str:
-    from cioos_siooc_data_transform_spark.functions.teos10 import ct_from_t_sql
-
-    return f"""
-    SELECT l_orderkey, l_linenumber,
-           round({_sound_speed_ct_sql("sa", "ct", "p")}, 6) AS sound_speed_ct
-    FROM (
-      SELECT l_orderkey, l_linenumber, p, {_SA_SQL} AS sa,
-             {ct_from_t_sql("s", "t", "p")} AS ct
-      FROM ({_IN_SQL})
-    )
-    """
-
-
-STAGED_ORACLES["gsw_sound_speed_ct_native"] = _sound_speed_ct_oracle()
-
-
 # ===========================================================================
 # Staged wave 14
 # ===========================================================================
@@ -3087,7 +3084,7 @@ STAGED_ORACLES["gsw_sound_speed_ct_native"] = _sound_speed_ct_oracle()
 # random-walk envelope). All integer micro-units; the prefix sum is one
 # ordered window per type.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "cusum_range_drift",
     oracle="""
     WITH q AS (
@@ -3202,7 +3199,7 @@ def _dedup_funnel_oracle() -> str:
     """
 
 
-@_register("dedup_layer_funnel", oracle="__LAZY__")
+@register("dedup_layer_funnel", _dedup_funnel_oracle())
 def dedup_layer_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pipeline-level dedup report: how many documents survive each
     layer, and the end-to-end retention fraction. Composes the existing
@@ -3262,9 +3259,6 @@ def dedup_layer_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["dedup_layer_funnel"] = _dedup_funnel_oracle()
-
-
 # ===========================================================================
 # Staged wave 15
 # ===========================================================================
@@ -3287,7 +3281,7 @@ _BIN_POWS = [1 << i for i in range(63)] + [-(1 << 63)]
 _BIN_POWS_SQL = "[" + ", ".join(str(v) for v in _BIN_POWS) + "]"
 
 
-@_register(
+@register(
     "embedding_binary_signature",
     oracle="""
     WITH bits AS (
@@ -3433,8 +3427,7 @@ def _ols_slope_quantized(pts: DataFrame, *, n_name: str, slope_name: str) -> Dat
     )
 
 
-
-@_register(
+@register(
     "vocab_zipf_slope",
     oracle="""
     WITH freq AS (
@@ -3518,7 +3511,21 @@ def _kappa_sql(sa: str, ct: str, p: str) -> str:
     return f"(-({dz})*1.0e-8/{v})"
 
 
-@_register("gsw_kappa", oracle="__LAZY__")
+def _kappa_oracle() -> str:
+    from cioos_siooc_data_transform_spark.functions.teos10 import ct_from_t_sql
+
+    return f"""
+    SELECT l_orderkey, l_linenumber,
+           round({_kappa_sql("sa", "ct", "p")} * 1.0e12, 6) AS kappa_per_tpa
+    FROM (
+      SELECT l_orderkey, l_linenumber, p, {_SA_SQL} AS sa,
+             {ct_from_t_sql("s", "t", "p")} AS ct
+      FROM ({_IN_SQL})
+    )
+    """
+
+
+@register("gsw_kappa", _kappa_oracle())
 def gsw_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Isentropic compressibility (1/Pa, ~4.1e-10 in the ocean) —
     emitted in 1e-12/Pa units so 6-dp rounding keeps ~6 significant
@@ -3542,29 +3549,12 @@ def gsw_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kappa_oracle() -> str:
-    from cioos_siooc_data_transform_spark.functions.teos10 import ct_from_t_sql
-
-    return f"""
-    SELECT l_orderkey, l_linenumber,
-           round({_kappa_sql("sa", "ct", "p")} * 1.0e12, 6) AS kappa_per_tpa
-    FROM (
-      SELECT l_orderkey, l_linenumber, p, {_SA_SQL} AS sa,
-             {ct_from_t_sql("s", "t", "p")} AS ct
-      FROM ({_IN_SQL})
-    )
-    """
-
-
-STAGED_ORACLES["gsw_kappa"] = _kappa_oracle()
-
-
 # ---------------------------------------------------------------------------
 # Heaps' law fit: vocabulary growth V(n) ~ K * n^beta over the corpus in
 # doc_id order — beta well below 1 is the expected sublinear growth;
 # beta near 1 means unbounded novel-token production (noisy OCR, ids).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "text_heaps_law_fit",
     oracle="""
     WITH tok AS (
@@ -3664,7 +3654,7 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the Pareto share curve — exact integer arithmetic until one final
 # division (cents, deterministic ordering by (revenue, custkey)).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "orders_gini_concentration",
     oracle="""
     WITH rev AS (
@@ -3744,7 +3734,7 @@ def orders_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Exact integer rationals; the inverse (1/D) is the "effective
 # vocabulary size" quality signal.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "text_simpson_diversity",
     oracle="""
     WITH tok AS (

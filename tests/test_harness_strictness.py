@@ -116,8 +116,8 @@ def test_staged_oracles_pass_type_lint():
     (orders_quantile_treatment_effect) whose oracle typed a struct-
     literal column DECIMAL(3,2) — it hash-matched at tested scales but
     was latently canon-divergent, and the registry-wide lint only sees
-    a slate AFTER activation. Linting the runway keeps each future
-    activation round from inheriting the bug class."""
+    a query once it is registered. Linting the parked slates keeps a
+    future registration from inheriting the bug class."""
     import importlib
     from pathlib import Path
 
@@ -138,12 +138,10 @@ def test_staged_oracles_pass_type_lint():
         mod = importlib.import_module(
             f"cioos_siooc_data_transform_spark.plans.{mod_name}"
         )
-        oracles = dict(mod.STAGED_ORACLES)
-        for name, (_fn, orc) in getattr(mod, "STAGED_REPLACEMENTS", {}).items():
-            oracles[f"{name} [repl]"] = orc
+        oracles = getattr(mod, "STAGED_ORACLES", {})
         for name, sql in oracles.items():
             if sql is None or name in live:
-                # activated names are swept by the registry-wide lint
+                # registered names are swept by the registry-wide lint
                 continue
             hits = lint_oracle_types(con, sql)
             if hits:

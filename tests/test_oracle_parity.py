@@ -14,37 +14,14 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_DIR_SMOKE, slow_gate
+from tests.conftest import SF_DIR_SMOKE, slate_entries, slow_gate
 from tests.oracle_harness import compare_query
 
 
 def _slate_covered() -> set[str]:
-    from cioos_siooc_data_transform_spark.plans import (
-        staged_r5,
-        staged_r6,
-        staged_r7,
-        staged_r8,
-        staged_r9,
-        staged_r10,
-        staged_r11,
-        staged_r12,
-        staged_r13,
-    )
-
     covered: set[str] = set()
-    for mod in (
-        staged_r5,
-        staged_r6,
-        staged_r7,
-        staged_r8,
-        staged_r9,
-        staged_r10,
-        staged_r11,
-        staged_r12,
-        staged_r13,
-    ):
-        covered |= set(mod.STAGED_QUERIES)
-        covered |= set(getattr(mod, "STAGED_REPLACEMENTS", {}))
+    for r in range(5, 14):
+        covered |= set(slate_entries(f"staged_r{r}")[0])
     return covered
 
 

@@ -1,8 +1,6 @@
-"""The round-11 slate (plans/staged_r11.py) is LIVE as of round 11:
-activated from plans/__init__.py, same cycle the round-5..10 slates
-followed (parked one round to respect the driver's 50-fresh-sample
-budget, then activated per the pre-audited activation note at
-plans/staged_r11.py:30-50). The three calendar-bounded windows in the
+"""Oracle coverage for the r11 query slate (plans/staged_r11.py): every
+registry entry whose builder lives in that module runs through the
+strict driver-faithful harness. The three calendar-bounded windows in the
 slate (events_changepoint_binseg2, orders_max_drawdown,
 orders_rolling_corr_12m) carry justified allowlist entries in
 tests/test_plans.py."""
@@ -11,62 +9,44 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_DIR_SMOKE
+from tests.conftest import SF_DIR_SMOKE, slate_entries
 
 
 def _staged():
-    from cioos_siooc_data_transform_spark.plans.staged_r11 import (
-        STAGED_ORACLES,
-        STAGED_QUERIES,
-        STAGED_REPLACEMENTS,
-    )
-
-    return STAGED_QUERIES, STAGED_ORACLES, STAGED_REPLACEMENTS
+    return slate_entries("staged_r11")
 
 
 def test_staged_now_registered():
-    """Round 11 activated the slate: every staged name must be live in
-    the registry with its oracle (the reverse of round 10's parked
-    invariant)."""
+    """Every slate builder is live in the registry with its oracle."""
     from cioos_siooc_data_transform_spark.plans import all_oracles, all_queries
 
-    qs, os_, reps = _staged()
+    qs, os_ = _staged()
     assert set(qs) == set(os_)
     live_q, live_o = all_queries(), all_oracles()
     missing = set(qs) - set(live_q)
-    assert not missing, f"staged queries not activated: {missing}"
+    assert not missing, f"staged queries not registered: {missing}"
     missing_o = set(os_) - set(live_o)
-    assert not missing_o, f"staged oracles not activated: {missing_o}"
-    for name, (fn, _) in reps.items():
-        assert name in live_q, f"replacement {name} has no live twin"
-        assert live_q[name] is fn, f"replacement {name} not applied"
+    assert not missing_o, f"staged oracles not registered: {missing_o}"
 
 
 def test_budget():
-    """Fresh-name budget: the driver samples 50 names per round, and
-    this slate activated at exactly 50 (50 new, 0 replacements)."""
-    qs, _, reps = _staged()
-    assert len(qs) + len(reps) == 50
-
-
-def test_activate_idempotent_after_import():
-    """plans/__init__.py already ran activate(); a second call must be a
-    no-op (0 newly-registered names)."""
-    from cioos_siooc_data_transform_spark.plans import staged_r11
-
-    assert staged_r11.activate() == 0
+    """The slate registers exactly 50 names."""
+    qs, _ = _staged()
+    assert len(qs) == 50
 
 
 def test_registered_callables_are_the_staged_ones():
-    """Activation must not have been shadowed by an earlier slate's
-    same-name registration (the silent-no-op trap: activate() skips
-    names that already exist)."""
+    """Every slate name resolves to this module's builder: a same-name
+    registration in another module would have overwritten it."""
     from cioos_siooc_data_transform_spark.plans import all_queries
 
-    qs, _, _ = _staged()
     live = all_queries()
-    shadowed = {n for n, fn in qs.items() if live.get(n) is not fn}
-    assert not shadowed, f"staged_r11 names shadowed by earlier slates: {shadowed}"
+    qualified = "cioos_siooc_data_transform_spark.plans.staged_r11"
+    shadowed = {
+        n for n in STAGED_NAMES
+        if getattr(live.get(n), "__module__", None) != qualified
+    }
+    assert not shadowed, f"staged_r11 names shadowed by other modules: {shadowed}"
 
 
 STAGED_NAMES: list[str] = [
@@ -136,30 +116,16 @@ STAGED_NAMES: list[str] = [
     "text_langid_confusion_matrix",
 ]
 
-REPLACEMENT_NAMES: list[str] = []
-
 
 def test_staged_name_list_is_complete():
-    qs, _, reps = _staged()
+    qs, _ = _staged()
     assert sorted(qs) == sorted(STAGED_NAMES)
-    assert sorted(reps) == sorted(REPLACEMENT_NAMES)
 
 
 @pytest.mark.parametrize("name", STAGED_NAMES)
 def test_staged_query_matches_oracle(spark, name):
     from tests.oracle_harness import compare_query
 
-    qs, os_, _ = _staged()
+    qs, os_ = _staged()
     ok, msg = compare_query(spark, SF_DIR_SMOKE, qs[name], os_[name])
     assert ok, f"{name}: {msg}"
-
-
-@pytest.mark.parametrize("name", REPLACEMENT_NAMES)
-def test_replacement_matches_oracle(spark, name):
-    from tests.oracle_harness import compare_query
-
-    _, _, reps = _staged()
-    fn, oracle = reps[name]
-    ok, msg = compare_query(spark, SF_DIR_SMOKE, fn, oracle)
-    assert ok, f"{name}: {msg}"
-

@@ -1,63 +1,35 @@
-"""The round-12 slate (plans/staged_r12.py) is LIVE as of round 12 —
-at 45 of its 50 names: round 12 is the first EXECUTED rotation round
-(see __spark_entry__.py ROTATION), so 5 fresh-sample slots went to
-names rotated out of _CHECKED and staged_r12.DEFER_TO_R13 carries the
-remaining five staged names to the round-13 activation. The slate was
-pre-audited DETECTOR-CLEAN (zero allowlist entries needed)."""
+"""Oracle coverage for the r12 query slate (plans/staged_r12.py): every
+registry entry whose builder lives in that module runs through the
+strict driver-faithful harness. The slate is detector-clean (zero allowlist entries)."""
 
 from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_DIR_SMOKE
+from tests.conftest import SF_DIR_SMOKE, slate_entries
 
 
 def _staged():
-    from cioos_siooc_data_transform_spark.plans.staged_r12 import (
-        STAGED_ORACLES,
-        STAGED_QUERIES,
-        STAGED_REPLACEMENTS,
-    )
-
-    return STAGED_QUERIES, STAGED_ORACLES, STAGED_REPLACEMENTS
-
-
-def _deferred():
-    from cioos_siooc_data_transform_spark.plans.staged_r12 import DEFER_TO_R13
-
-    return DEFER_TO_R13
+    return slate_entries("staged_r12")
 
 
 def test_staged_now_fully_registered():
-    """Round 12 activated the slate minus DEFER_TO_R13; round 13
-    activated the deferred carry-overs via
-    ``activate(include_deferred=True)`` — every staged name must now be
-    live in the registry with its oracle."""
+    """Every slate builder is live in the registry with its oracle."""
     from cioos_siooc_data_transform_spark.plans import all_oracles, all_queries
 
-    qs, os_, reps = _staged()
-    deferred = _deferred()
+    qs, os_ = _staged()
     assert set(qs) == set(os_)
-    assert deferred <= set(qs), "DEFER_TO_R13 names must be staged names"
     live_q, live_o = all_queries(), all_oracles()
     missing = set(qs) - set(live_q)
-    assert not missing, f"staged queries not activated: {missing}"
+    assert not missing, f"staged queries not registered: {missing}"
     missing_o = set(os_) - set(live_o)
-    assert not missing_o, f"staged oracles not activated: {missing_o}"
-    for name, (fn, _) in reps.items():
-        assert name in live_q, f"replacement {name} has no live twin"
-        assert live_q[name] is fn, f"replacement {name} not applied"
+    assert not missing_o, f"staged oracles not registered: {missing_o}"
 
 
 def test_budget():
-    """Fresh-name budget: the driver samples 50 names per round.
-    Round 12 spends them as 45 activated staged names + 5 rotated
-    _CHECKED names (the executed rotation)."""
-    qs, _, reps = _staged()
-    deferred = _deferred()
-    assert len(qs) + len(reps) == 50
-    assert len(deferred) == 5
-    assert len(set(qs) - deferred) + len(reps) == 45
+    """The slate registers exactly 50 names."""
+    qs, _ = _staged()
+    assert len(qs) == 50
 
 
 def test_rotation_names_rejoined_checked():
@@ -88,70 +60,43 @@ def test_rotation_names_rejoined_checked():
 
 
 def test_activated_names_are_checked():
-    """Every round-12-green name (the 45 activated + the 5 rotation
-    re-earns, per CORRECTNESS_r12.json) must sit in _CHECKED so the
-    fresh sample is spent on never-checked names only. The
-    DEFER_TO_R13 carry-overs earned their green rows in round 13 and
-    must now be checked too."""
+    """Every slate name has a green driver row (CORRECTNESS_r12 and
+    CORRECTNESS_r13) and must sit in _CHECKED so the fresh sample is
+    spent on never-checked names only."""
     import __spark_entry__ as entrymod
 
-    qs, _, _ = _staged()
-    deferred = _deferred()
+    qs, _ = _staged()
     # dedup_bucket_cap_sweep and dedup_lsh_band_tradeoff rotated OUT
     # again MID-round-14: they consume the shared _distinct_shingles
     # helper, whose reuse anchor changed (moved-code-rotates-first).
     rerotated_r14 = {"dedup_bucket_cap_sweep", "dedup_lsh_band_tradeoff"}
-    missing = (set(qs) - deferred - rerotated_r14) - entrymod._CHECKED
+    missing = (set(qs) - rerotated_r14) - entrymod._CHECKED
     assert not missing, f"r12-green staged names not in _CHECKED: {missing}"
     stale = rerotated_r14 & entrymod._CHECKED
     assert not stale, f"round-14 re-rotated names still in _CHECKED: {stale}"
-    unchecked_deferred = deferred - entrymod._CHECKED
-    assert not unchecked_deferred, (
-        f"DEFER_TO_R13 names earned green rows in round 13, must be "
-        f"checked now: {unchecked_deferred}"
-    )
-
-
-def test_activate_idempotent_after_import():
-    """plans/__init__.py already ran activate(); a second call must be a
-    no-op (0 newly-registered names) — and it must NOT sneak the
-    deferred names in."""
-    from cioos_siooc_data_transform_spark.plans import all_queries, staged_r12
-
-    assert staged_r12.activate() == 0
-    assert staged_r12.activate(include_deferred=True) == 0
-    assert _deferred() <= set(all_queries())
 
 
 def test_registered_callables_are_the_staged_ones():
-    """Activation must not have been shadowed by an earlier slate's
-    same-name registration (the silent-no-op trap: activate() skips
-    names that already exist)."""
+    """Every slate name resolves to this module's builder: a same-name
+    registration in another module would have overwritten it."""
     from cioos_siooc_data_transform_spark.plans import all_queries
 
-    qs, _, _ = _staged()
     live = all_queries()
-    shadowed = {n for n, fn in qs.items() if live.get(n) is not fn}
-    assert not shadowed, f"staged_r12 names shadowed by earlier slates: {shadowed}"
+    qualified = "cioos_siooc_data_transform_spark.plans.staged_r12"
+    shadowed = {
+        n for n in STAGED_NAMES
+        if getattr(live.get(n), "__module__", None) != qualified
+    }
+    assert not shadowed, f"staged_r12 names shadowed by other modules: {shadowed}"
 
 
 def test_no_collision_with_earlier_slates():
-    """A staged_r12 name colliding with the earlier slates would have
-    silently no-opped at round-12 activation — catch it at build time
-    instead (the lineitem_benford_audit lesson)."""
-    from cioos_siooc_data_transform_spark.plans import (
-        staged_r8,
-        staged_r9,
-        staged_r10,
-        staged_r11,
-    )
-
-    qs, _, reps = _staged()
+    """No staged_r12 name is served by an r8..r11 builder (the
+    lineitem_benford_audit lesson)."""
     earlier = set()
-    for mod in (staged_r8, staged_r9, staged_r10, staged_r11):
-        earlier |= set(mod.STAGED_QUERIES)
-        earlier |= set(getattr(mod, "STAGED_REPLACEMENTS", {}))
-    clash = (set(qs) | set(reps)) & earlier
+    for mod in ("staged_r8", "staged_r9", "staged_r10", "staged_r11"):
+        earlier |= set(slate_entries(mod)[0])
+    clash = set(STAGED_NAMES) & earlier
     assert not clash, f"staged_r12 names collide with r8..r11: {clash}"
 
 
@@ -216,7 +161,7 @@ STAGED_NAMES: list[str] = [
     "dedup_bucket_cap_sweep",
     "events_dayk_retention_curve",
     "orders_priority_stochastic_dominance",
-    # wave N — slate close-out part 2 (== DEFER_TO_R13: carries to r13)
+    # wave N — slate close-out part 2
     "sketch_cm_width_sweep",
     "part_unit_price_dispersion",
     "partsupp_stock_cover_audit",
@@ -225,44 +170,30 @@ STAGED_NAMES: list[str] = [
 ]
 
 
-REPLACEMENT_NAMES: list[str] = []
-
-
 def test_staged_name_list_is_complete():
-    qs, _, reps = _staged()
+    qs, _ = _staged()
     assert sorted(qs) == sorted(STAGED_NAMES)
-    assert sorted(reps) == sorted(REPLACEMENT_NAMES)
-    assert _deferred() <= set(STAGED_NAMES)
 
 
 @pytest.mark.parametrize("name", STAGED_NAMES)
 def test_staged_query_matches_oracle(spark, name):
     from tests.oracle_harness import compare_query
 
-    qs, os_, _ = _staged()
+    qs, os_ = _staged()
     ok, msg = compare_query(spark, SF_DIR_SMOKE, qs[name], os_[name])
     assert ok, f"{name}: {msg}"
 
 
-@pytest.mark.parametrize("name", REPLACEMENT_NAMES)
-def test_replacement_matches_oracle(spark, name):
-    from tests.oracle_harness import compare_query
-
-    _, _, reps = _staged()
-    fn, oracle = reps[name]
-    ok, msg = compare_query(spark, SF_DIR_SMOKE, fn, oracle)
-    assert ok, f"{name}: {msg}"
-
-
 def test_reload_does_not_mutate_registry():
-    """Re-importing the module must not mutate the live registry
-    (activation happens only from plans/__init__.py)."""
+    """Re-importing the module re-registers the same names in place:
+    registry order and oracle text stay unchanged."""
     import importlib
 
-    from cioos_siooc_data_transform_spark.plans import all_queries
+    from cioos_siooc_data_transform_spark.plans import all_oracles, all_queries
 
-    before = set(all_queries())
+    before_names, before_oracles = list(all_queries()), all_oracles()
     import cioos_siooc_data_transform_spark.plans.staged_r12 as m
 
     importlib.reload(m)
-    assert set(all_queries()) == before
+    assert list(all_queries()) == before_names
+    assert all_oracles() == before_oracles

@@ -1,66 +1,54 @@
-"""The round-13 slate (plans/staged_r13.py) is FULLY LIVE as of round
-14: round 13 activated 40 slate names (+ the 5 staged_r12
-DEFER_TO_R13 carry-overs + 5 rotated _CHECKED names = that round's
-50-fresh sample); round 14's ``activate(include_deferred=True)``
-brought in the GSW freezing-poly + Saunders + wave-M family
-(DEFER_TO_R14), registry 630 -> 640. The one calendar-bounded window
-in the slate (events_page_hinkley_drift) carries its justified
-allowlist entry in tests/test_plans.py."""
+"""Oracle coverage for the r13 query slate (plans/staged_r13.py): every
+registry entry whose builder lives in that module runs through the
+strict driver-faithful harness. The one calendar-bounded window in the slate
+(events_page_hinkley_drift) carries its justified allowlist entry in
+tests/test_plans.py."""
 
 from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_DIR_SMOKE
+from tests.conftest import SF_DIR_SMOKE, slate_entries
 
 
 def _staged():
-    from cioos_siooc_data_transform_spark.plans.staged_r13 import (
-        STAGED_ORACLES,
-        STAGED_QUERIES,
-        STAGED_REPLACEMENTS,
-    )
-
-    return STAGED_QUERIES, STAGED_ORACLES, STAGED_REPLACEMENTS
+    return slate_entries("staged_r13")
 
 
-def _deferred():
-    from cioos_siooc_data_transform_spark.plans.staged_r13 import DEFER_TO_R14
+#: The GSW freezing-poly + Saunders + wave-M family: the slate's last ten
+#: registrations, first sampled by the driver in round 14.
+GSW_TAIL_R14 = [
+    "gsw_salinity_scale_roundtrips",
+    "gsw_ct_freezing_poly",
+    "gsw_t_freezing_poly",
+    "gsw_sa_freezing_from_ct_poly",
+    "gsw_ct_freezing_derivs_poly",
+    "gsw_z_from_p",
+    "gsw_p_from_z",
+    "gsw_ct_entropy_from_pt",
+    "gsw_melting_ice_equilibrium_ratio",
+    "gsw_adiabatic_lapse_rate_from_ct",
+]
 
-    return DEFER_TO_R14
 
-
-def test_staged_now_registered_except_deferred():
-    """Round 14 activated the slate fully (round 13 brought the
-    non-deferred 40, round 14's activate(include_deferred=True) the
-    DEFER_TO_R14 GSW family): every staged name must be live in the
-    registry with its oracle."""
+def test_staged_now_registered():
+    """Every slate builder is live in the registry with its oracle."""
     from cioos_siooc_data_transform_spark.plans import all_oracles, all_queries
 
-    qs, os_, reps = _staged()
-    deferred = _deferred()
+    qs, os_ = _staged()
     assert set(qs) == set(os_)
-    assert deferred <= set(qs), "DEFER_TO_R14 names must be staged names"
     live_q, live_o = all_queries(), all_oracles()
     missing = set(qs) - set(live_q)
-    assert not missing, f"staged queries not activated: {missing}"
+    assert not missing, f"staged queries not registered: {missing}"
     missing_o = set(os_) - set(live_o)
-    assert not missing_o, f"staged oracles not activated: {missing_o}"
-    for name, (fn, _) in reps.items():
-        assert name in live_q, f"replacement {name} has no live twin"
-        assert live_q[name] is fn, f"replacement {name} not applied"
+    assert not missing_o, f"staged oracles not registered: {missing_o}"
 
 
 def test_budget():
-    """Fresh-name budget: the driver samples 50 names per round.
-    Round 13 spends them as 5 staged_r12.DEFER_TO_R13 carry-overs +
-    40 activated slate names + 5 rotated _CHECKED names (the second
-    executed rotation)."""
-    qs, _, reps = _staged()
-    deferred = _deferred()
-    assert len(qs) + len(reps) == 50
-    assert len(deferred) == 10
-    assert len(set(qs) - deferred) + len(reps) == 40
+    """The slate registers exactly 50 names, the GSW tail last."""
+    qs, _ = _staged()
+    assert len(qs) == 50
+    assert list(qs)[-len(GSW_TAIL_R14):] == GSW_TAIL_R14
 
 
 ROTATED_R13 = {
@@ -124,18 +112,17 @@ ROTATED_R14 = {
 
 def test_fresh_sample_leads_round14():
     """The driver takes the FIRST 50 names in dict order; the fresh
-    (not-in-_CHECKED) prefix must be exactly the 10 activated
-    DEFER_TO_R14 names + the 37 round-14 rotated names (11 from the
+    (not-in-_CHECKED) prefix must be exactly the 10 GSW_TAIL_R14
+    names + the 37 round-14 rotated names (11 from the
     committed queue + 2 copurchase moved-code rotations + 24
     shingle-anchor moved-code rotations), and must lead the dict order
     so the driver's 50-name sample covers them all (the remaining
     slots fall to _CHECKED names as regression coverage)."""
     import __spark_entry__ as entrymod
 
-    deferred = _deferred()
     names = list(entrymod.queries())
     fresh = [n for n in names if n not in entrymod._CHECKED]
-    expected = set(deferred) | ROTATED_R14
+    expected = set(GSW_TAIL_R14) | ROTATED_R14
     assert set(fresh) == expected, (
         f"unexpected fresh set: +{set(fresh) - expected} -{expected - set(fresh)}"
     )
@@ -144,24 +131,12 @@ def test_fresh_sample_leads_round14():
 
 
 def test_no_collision_with_earlier_slates():
-    """A staged_r13 name colliding with the (not-yet-activated)
-    r8..r12 slates would silently no-op at round-13 activation —
-    catch it at build time instead (the lineitem_benford_audit
-    lesson)."""
-    from cioos_siooc_data_transform_spark.plans import (
-        staged_r8,
-        staged_r9,
-        staged_r10,
-        staged_r11,
-        staged_r12,
-    )
-
-    qs, _, reps = _staged()
+    """No staged_r13 name is served by an r8..r12 builder (the
+    lineitem_benford_audit lesson)."""
     earlier = set()
-    for mod in (staged_r8, staged_r9, staged_r10, staged_r11, staged_r12):
-        earlier |= set(mod.STAGED_QUERIES)
-        earlier |= set(getattr(mod, "STAGED_REPLACEMENTS", {}))
-    clash = (set(qs) | set(reps)) & earlier
+    for mod in ("staged_r8", "staged_r9", "staged_r10", "staged_r11", "staged_r12"):
+        earlier |= set(slate_entries(mod)[0])
+    clash = set(STAGED_NAMES) & earlier
     assert not clash, f"staged_r13 names collide with r8..r12: {clash}"
 
 
@@ -233,70 +208,44 @@ STAGED_NAMES: list[str] = [
 ]
 
 
-
-REPLACEMENT_NAMES: list[str] = []
-
-
 def test_staged_name_list_is_complete():
-    qs, _, reps = _staged()
+    qs, _ = _staged()
     assert sorted(qs) == sorted(STAGED_NAMES)
-    assert sorted(reps) == sorted(REPLACEMENT_NAMES)
 
 
 @pytest.mark.parametrize("name", STAGED_NAMES)
 def test_staged_query_matches_oracle(spark, name):
     from tests.oracle_harness import compare_query
 
-    qs, os_, _ = _staged()
+    qs, os_ = _staged()
     ok, msg = compare_query(spark, SF_DIR_SMOKE, qs[name], os_[name])
     assert ok, f"{name}: {msg}"
 
 
-@pytest.mark.parametrize("name", REPLACEMENT_NAMES)
-def test_replacement_matches_oracle(spark, name):
-    from tests.oracle_harness import compare_query
-
-    _, _, reps = _staged()
-    fn, oracle = reps[name]
-    ok, msg = compare_query(spark, SF_DIR_SMOKE, fn, oracle)
-    assert ok, f"{name}: {msg}"
-
-
-def test_activate_idempotent_after_import():
-    """plans/__init__.py already ran activate(include_deferred=True)
-    in round 14; further calls must be no-ops (0 newly-registered
-    names) and the deferred family must be live."""
-    from cioos_siooc_data_transform_spark.plans import all_queries, staged_r13
-
-    assert staged_r13.activate() == 0
-    assert staged_r13.activate(include_deferred=True) == 0
-    assert _deferred() <= set(all_queries())
-
-
 def test_registered_callables_are_the_staged_ones():
-    """Activation must not have been shadowed by an earlier slate's
-    same-name registration (the silent-no-op trap: activate() skips
-    names that already exist)."""
+    """Every slate name resolves to this module's builder: a same-name
+    registration in another module would have overwritten it."""
     from cioos_siooc_data_transform_spark.plans import all_queries
 
-    qs, _, _ = _staged()
-    deferred = _deferred()
     live = all_queries()
+    qualified = "cioos_siooc_data_transform_spark.plans.staged_r13"
     shadowed = {
-        n for n, fn in qs.items() if n not in deferred and live.get(n) is not fn
+        n for n in STAGED_NAMES
+        if getattr(live.get(n), "__module__", None) != qualified
     }
-    assert not shadowed, f"staged_r13 names shadowed by earlier slates: {shadowed}"
+    assert not shadowed, f"staged_r13 names shadowed by other modules: {shadowed}"
 
 
 def test_reload_does_not_mutate_registry():
-    """Re-importing the module must not mutate the live registry
-    (activation happens only from plans/__init__.py)."""
+    """Re-importing the module re-registers the same names in place:
+    registry order and oracle text stay unchanged."""
     import importlib
 
-    from cioos_siooc_data_transform_spark.plans import all_queries
+    from cioos_siooc_data_transform_spark.plans import all_oracles, all_queries
 
-    before = set(all_queries())
+    before_names, before_oracles = list(all_queries()), all_oracles()
     import cioos_siooc_data_transform_spark.plans.staged_r13 as m
 
     importlib.reload(m)
-    assert set(all_queries()) == before
+    assert list(all_queries()) == before_names
+    assert all_oracles() == before_oracles

@@ -1,43 +1,34 @@
-"""Keep the STAGED round-5 queries green while they wait for
-registration (plans/staged_r5.py — parked so round 4's fresh-query
-count stays at the driver's 50-sample budget).
+"""Oracle coverage for the r5 query slate (plans/staged_r5.py): every
+registry entry whose builder lives in that module runs through the
+strict driver-faithful harness.
 
-Every staged query runs through the same strict driver-faithful harness
-the registry uses; the GSW additions also pin published UNESCO 1983
+The GSW additions also pin published UNESCO 1983
 check values so a typo'd constant cannot hide behind oracle symmetry
 (both sides sharing one SQL template means the oracle can't catch a
-wrong coefficient — the independent check value can).
-"""
+wrong coefficient — the independent check value can)."""
 
 from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_DIR_SMOKE
+from tests.conftest import SF_DIR_SMOKE, slate_entries
 
 
 def _staged():
-    from cioos_siooc_data_transform_spark.plans.staged_r5 import (
-        STAGED_ORACLES,
-        STAGED_QUERIES,
-    )
-
-    return STAGED_QUERIES, STAGED_ORACLES
+    return slate_entries("staged_r5")
 
 
 def test_staged_now_registered():
-    """Round 5 activated the slate: every staged name must be live in
-    the registry with its oracle (the reverse of round 4's parked
-    invariant)."""
+    """Every slate builder is live in the registry with its oracle."""
     from cioos_siooc_data_transform_spark.plans import all_oracles, all_queries
 
     qs, os_ = _staged()
     assert set(qs) == set(os_)
     live_q, live_o = all_queries(), all_oracles()
     missing = set(qs) - set(live_q)
-    assert not missing, f"staged queries not activated: {missing}"
+    assert not missing, f"staged queries not registered: {missing}"
     missing_o = set(os_) - set(live_o)
-    assert not missing_o, f"staged oracles not activated: {missing_o}"
+    assert not missing_o, f"staged oracles not registered: {missing_o}"
 
 
 STAGED_NAMES = [
@@ -179,15 +170,6 @@ def test_funnel_rates_monotone(spark):
     for r in rows.values():
         assert 0.0 < r.conv_from_top <= 1.0
         assert 0.0 < r.conv_from_prev <= 1.0
-
-
-def test_activate_idempotent_after_import():
-    """plans/__init__.py already ran activate(); a second call must be a
-    no-op (idempotence is what makes the import-time activation safe
-    under repeated imports / reload)."""
-    from cioos_siooc_data_transform_spark.plans import staged_r5
-
-    assert staged_r5.activate() == 0
 
 
 def test_staged_plans_never_cartesian(spark):

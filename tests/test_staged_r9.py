@@ -1,69 +1,47 @@
-"""The round-9 slate (plans/staged_r9.py) is LIVE as of round 9:
-activated from plans/__init__.py, same cycle the round-5..8 slates
-followed (parked one round to respect the driver's 50-fresh-sample
-budget, then activated). Includes the REPLACEMENT contract: the
-staged-Horner twins of gsw_dynamic_enthalpy / gsw_enthalpy went live in
-round 8 and left __spark_entry__._CHECKED at this activation so the
-driver re-earns their rows on the new expression trees."""
+"""Oracle coverage for the r9 query slate (plans/staged_r9.py): every
+registry entry whose builder lives in that module runs through the
+strict driver-faithful harness.
+
+The staged-Horner gsw_dynamic_enthalpy / gsw_enthalpy
+live in plans/staged_r5.py; this file keeps their value-identity check
+against the unregistered flat forms there."""
 
 from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_DIR_SMOKE
+from tests.conftest import SF_DIR_SMOKE, slate_entries
 
 
 def _staged():
-    from cioos_siooc_data_transform_spark.plans.staged_r9 import (
-        STAGED_ORACLES,
-        STAGED_QUERIES,
-        STAGED_REPLACEMENTS,
-    )
-
-    return STAGED_QUERIES, STAGED_ORACLES, STAGED_REPLACEMENTS
+    return slate_entries("staged_r9")
 
 
 def test_staged_now_registered():
-    """Round 9 activated the slate: every staged name must be live in
-    the registry with its oracle (the reverse of round 8's parked
-    invariant), and the REPLACEMENT callables must BE the registered
-    ones."""
+    """Every slate builder is live in the registry with its oracle."""
     from cioos_siooc_data_transform_spark.plans import all_oracles, all_queries
 
-    qs, os_, reps = _staged()
+    qs, os_ = _staged()
     assert set(qs) == set(os_)
     live_q, live_o = all_queries(), all_oracles()
     missing = set(qs) - set(live_q)
-    assert not missing, f"staged queries not activated: {missing}"
+    assert not missing, f"staged queries not registered: {missing}"
     missing_o = set(os_) - set(live_o)
-    assert not missing_o, f"staged oracles not activated: {missing_o}"
-    for name, (fn, _) in reps.items():
-        assert name in live_q, f"replacement {name} has no live twin"
-        assert live_q[name] is fn, f"replacement {name} not applied"
+    assert not missing_o, f"staged oracles not registered: {missing_o}"
 
 
 def test_replacements_recheck_completed():
-    """The REPLACEMENTS contract, final state: the replaced names left
-    _CHECKED at the round-9 activation, re-earned green driver rows on
-    the new expression trees (CORRECTNESS_r09.json has both), and
-    returned to _CHECKED at the round-10 activation. If this fails
-    because a replacement is missing from _CHECKED, its re-check never
-    landed — do NOT just add it; find the green row first."""
+    """The staged-Horner names re-earned green driver rows on their new
+    expression trees (CORRECTNESS_r09.json has both) and sit in
+    _CHECKED. If this fails because one is missing from _CHECKED, its
+    re-check never landed — do NOT just add it; find the green row
+    first."""
     import __spark_entry__ as e
 
-    _, _, reps = _staged()
-    unrechecked = set(reps) - e._CHECKED
+    unrechecked = set(REPLACEMENT_NAMES) - e._CHECKED
     assert not unrechecked, (
-        f"replacement names never re-checked after activation: {unrechecked}"
+        f"staged-Horner names never re-checked: {unrechecked}"
     )
-
-
-def test_activate_idempotent_after_import():
-    """plans/__init__.py already ran activate(); a second call must be a
-    no-op (0 newly-registered names)."""
-    from cioos_siooc_data_transform_spark.plans import staged_r9
-
-    assert staged_r9.activate() == 0
 
 
 STAGED_NAMES = [
@@ -131,23 +109,22 @@ STAGED_NAMES = [
 ]
 
 REPLACEMENT_NAMES = [
-    # wave B — staged-Horner dynamic-enthalpy migrations
+    # staged-Horner dynamic-enthalpy builders, registered from staged_r5
     "gsw_dynamic_enthalpy",
     "gsw_enthalpy",
 ]
 
 
 def test_staged_name_list_is_complete():
-    qs, _, reps = _staged()
+    qs, _ = _staged()
     assert sorted(qs) == sorted(STAGED_NAMES)
-    assert sorted(reps) == sorted(REPLACEMENT_NAMES)
 
 
 @pytest.mark.parametrize("name", STAGED_NAMES)
 def test_staged_query_matches_oracle(spark, name):
     from tests.oracle_harness import compare_query
 
-    qs, os_, _ = _staged()
+    qs, os_ = _staged()
     ok, msg = compare_query(spark, SF_DIR_SMOKE, qs[name], os_[name])
     assert ok, f"{name}: {msg}"
 
@@ -156,40 +133,43 @@ def test_staged_query_matches_oracle(spark, name):
 def test_replacement_matches_oracle(spark, name):
     from tests.oracle_harness import compare_query
 
-    _, _, reps = _staged()
-    fn, oracle = reps[name]
-    ok, msg = compare_query(spark, SF_DIR_SMOKE, fn, oracle)
+    from cioos_siooc_data_transform_spark.plans import all_oracles, all_queries
+
+    ok, msg = compare_query(
+        spark, SF_DIR_SMOKE, all_queries()[name], all_oracles()[name]
+    )
     assert ok, f"{name}: {msg}"
 
 
 @pytest.mark.parametrize("name", REPLACEMENT_NAMES)
 def test_replacement_value_identical_to_flat_form(spark, name):
-    """The staged-Horner twin must reproduce the original flat-form
-    query's quantized output row-for-row at the smoke SF (the regrouped
-    tree differs only in last-ulp rounding below the output floor).
-    Since the round-8 early pull the replacement IS the live registry
-    entry, so compare against the retired flat builders kept in
-    plans/staged_r5.py."""
-    from cioos_siooc_data_transform_spark.plans import staged_r5
+    """The registered staged-Horner builder must reproduce the flat-form
+    builder's quantized output row-for-row at the smoke SF (the regrouped
+    tree differs only in last-ulp rounding below the output floor). The
+    flat builders stay unregistered in plans/staged_r5.py for this
+    comparison."""
+    from cioos_siooc_data_transform_spark.plans import all_queries, staged_r5
 
     flat = {
         "gsw_dynamic_enthalpy": staged_r5.gsw_dynamic_enthalpy,
         "gsw_enthalpy": staged_r5.gsw_enthalpy,
     }[name]
-    _, _, reps = _staged()
-    fn, _ = reps[name]
+    fn = all_queries()[name]
+    assert fn is not flat
     new = {tuple(r) for r in fn(spark, SF_DIR_SMOKE).collect()}
     old = {tuple(r) for r in flat(spark, SF_DIR_SMOKE).collect()}
     assert new == old
 
 
 def test_registered_callables_are_the_staged_ones():
-    """Activation must not have been shadowed by an earlier slate's
-    same-name registration (the silent-no-op trap: activate() skips
-    names that already exist)."""
+    """Every slate name resolves to this module's builder: a same-name
+    registration in another module would have overwritten it."""
     from cioos_siooc_data_transform_spark.plans import all_queries
 
-    qs, _, _ = _staged()
     live = all_queries()
-    shadowed = {n for n, fn in qs.items() if live.get(n) is not fn}
-    assert not shadowed, f"staged_r9 names shadowed by earlier slates: {shadowed}"
+    qualified = "cioos_siooc_data_transform_spark.plans.staged_r9"
+    shadowed = {
+        n for n in STAGED_NAMES
+        if getattr(live.get(n), "__module__", None) != qualified
+    }
+    assert not shadowed, f"staged_r9 names shadowed by other modules: {shadowed}"
