@@ -34,8 +34,11 @@ def convert(
     netcdf: bool = False,
     spark=None,
 ) -> dict:
+    """Convert the IOS files under ``in_dir`` in one pass: the parse is
+    cached once and BODC-coded once, and every sink reads both."""
     from pyspark.sql import functions as F
 
+    from cioos_siooc_data_transform_spark.operators.bodc import assign_bodc_codes
     from cioos_siooc_data_transform_spark.operators.views import filter_new_files
     from cioos_siooc_data_transform_spark.session import get_spark
     from cioos_siooc_data_transform_spark.sinks.cf_parquet import write_cf_dataset
@@ -46,21 +49,27 @@ def convert(
     from cioos_siooc_data_transform_spark.sources.ios_source import (
         discover_files,
         ios_catalog,
+        ios_channels,
         parse_ios,
     )
 
     own_session = spark is None
     if own_session:
         spark = get_spark("cioos-siooc-convert")
+    parsed = codes = None
     try:
         files = discover_files(spark, in_dir, FTYPE_EXTENSIONS[ftype])
         if opt == "new":
             files = filter_new_files(files, hours=24.0)
         parsed = parse_ios(files).cache()
-        n_files = parsed.count()
-        n_errors = parsed.filter(F.col("error").isNotNull()).count()
+        counts = parsed.agg(
+            F.count("*").alias("files"), F.count("error").alias("errors")
+        ).first()
+        # coded once, read by both sinks (the measurements join, the
+        # variables table and the NetCDF variable lists)
+        codes = assign_bodc_codes(ios_channels(parsed)).cache()
 
-        paths = write_cf_dataset(parsed, out_dir)
+        paths = write_cf_dataset(parsed, out_dir, codes=codes)
 
         if geojson:
             polys = read_geojson_polygons(spark, geojson)
@@ -73,12 +82,14 @@ def convert(
                 write_netcdf_dir,
             )
 
-            write_netcdf_dir(parsed, f"{out_dir}/netcdf")
+            write_netcdf_dir(parsed, f"{out_dir}/netcdf", codes=codes)
             paths["netcdf"] = f"{out_dir}/netcdf"
 
-        parsed.unpersist()
-        return {"files": n_files, "errors": n_errors, "paths": paths}
+        return {"files": counts["files"], "errors": counts["errors"], "paths": paths}
     finally:
+        for cached in (parsed, codes):
+            if cached is not None:
+                cached.unpersist()
         if own_session:
             spark.stop()
 

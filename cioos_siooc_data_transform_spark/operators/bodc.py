@@ -95,15 +95,27 @@ def bodc_base_struct(var_type: Column, name: Column, units: Column) -> Column:
             cond = cond & _contains_any(units, uinc)
         expr = F.when(
             cond,
-            F.struct(
-                F.lit(base).alias("base"),
-                F.lit(width).alias("width"),
-                F.lit(cu).alias("units"),
-                F.lit(std).alias("std_name"),
-                F.lit(lng).alias("long_name"),
+            _const_struct(
+                base=base, width=width, units=cu, std_name=std, long_name=lng
             ),
         ).otherwise(expr)
     return expr
+
+
+def _sql_literal(value) -> str:
+    if isinstance(value, str):
+        return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return repr(int(value))
+
+
+def _const_struct(**fields) -> Column:
+    """A constant struct in ONE py4j call (an F.struct of five aliased
+    literals takes 32); same field names, types and non-null fields."""
+    return F.expr(
+        "named_struct("
+        + ", ".join(f"{_sql_literal(k)}, {_sql_literal(v)}" for k, v in fields.items())
+        + ")"
+    )
 
 
 def assign_bodc_codes(channels: DataFrame, routing_rules=None) -> DataFrame:

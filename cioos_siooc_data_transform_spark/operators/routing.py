@@ -30,11 +30,17 @@ CTD_ROUTING_RULES: list[tuple[str, list[str], list[str]]] = [
 
 
 def _contains_any(col: Column, keywords: list[str]) -> Column:
-    """Case-insensitive 'any keyword is a substring' (IDT/utils.py:15-18)."""
-    expr = F.lit(False)
+    """Case-insensitive 'any keyword is a substring' (IDT/utils.py:15-18).
+
+    Every Column call is a py4j round trip and the routing and BODC
+    ladders call this for every rule, so the column is upper-cased once
+    and the hits are OR-ed without a leading FALSE literal."""
+    upper = F.upper(col)
+    expr = None
     for k in keywords:
-        expr = expr | F.upper(col).contains(k.upper())
-    return expr
+        hit = upper.contains(k.upper())
+        expr = hit if expr is None else expr | hit
+    return F.lit(False) if expr is None else expr
 
 
 def dropped_channels(channels, rules=None):

@@ -25,14 +25,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def to_netcdf_bytes(parsed: DataFrame) -> DataFrame:
-    """Parsed IOS rows → (file_id, year, nc_bytes)."""
-    from cioos_siooc_data_transform_spark.operators.bodc import assign_bodc_codes
-    from cioos_siooc_data_transform_spark.sources.ios_source import ios_channels
+def to_netcdf_bytes(parsed: DataFrame, codes: DataFrame | None = None) -> DataFrame:
+    """Parsed IOS rows → (file_id, year, nc_bytes). ``codes`` is
+    ``assign_bodc_codes(ios_channels(parsed))``, derived when absent."""
+    if codes is None:
+        from cioos_siooc_data_transform_spark.operators.bodc import assign_bodc_codes
+        from cioos_siooc_data_transform_spark.sources.ios_source import ios_channels
 
-    codes = (
-        assign_bodc_codes(ios_channels(parsed))
-        .groupBy("file_id")
+        codes = assign_bodc_codes(ios_channels(parsed))
+    cf_vars = (
+        codes.groupBy("file_id")
         .agg(
             F.collect_list(
                 F.struct(
@@ -42,7 +44,7 @@ def to_netcdf_bytes(parsed: DataFrame) -> DataFrame:
             ).alias("cf_vars")
         )
     )
-    enriched = parsed.join(codes, "file_id", "left")
+    enriched = parsed.join(cf_vars, "file_id", "left")
 
     def build(batches: Iterator) -> Iterator:
         import numpy as np
@@ -149,15 +151,23 @@ def to_netcdf_bytes(parsed: DataFrame) -> DataFrame:
     return enriched.mapInPandas(build, schema="file_id string, year int, nc_bytes binary")
 
 
-def write_netcdf_dir(parsed: DataFrame, out_dir: str) -> int:
+def write_netcdf_dir(
+    parsed: DataFrame, out_dir: str, codes: DataFrame | None = None
+) -> int:
     """Materialize one .nc per file under out_dir/<year>/<file_id>.nc.
 
-    Executor-side writes via foreachPartition (no driver collect — file
-    bytes never funnel through one process); a task retry simply rewrites
-    the same paths, so the write is idempotent. Returns the file count.
+    One Spark job: executor-side writes via foreachPartition (no driver
+    collect — file bytes never funnel through one process) that also
+    count the files through an accumulator. Spark applies an action's
+    accumulator updates once per successful task, so a retried task
+    neither double-counts nor leaves a partial file: it rewrites the
+    same paths through a temp file and rename. Returns the file count.
+    ``codes`` as in to_netcdf_bytes.
     """
+    written = parsed.sparkSession.sparkContext.accumulator(0)
 
     def write_partition(rows) -> None:
+        n = 0
         for r in rows:
             d = os.path.join(out_dir, str(r["year"]))
             os.makedirs(d, exist_ok=True)
@@ -165,10 +175,8 @@ def write_netcdf_dir(parsed: DataFrame, out_dir: str) -> int:
             with open(tmp, "wb") as f:
                 f.write(bytes(r["nc_bytes"]))
             os.replace(tmp, os.path.join(d, f"{r['file_id']}.nc"))
+            n += 1
+        written.add(n)
 
-    nc = to_netcdf_bytes(parsed).cache()
-    try:
-        nc.foreachPartition(write_partition)
-        return nc.count()
-    finally:
-        nc.unpersist()
+    to_netcdf_bytes(parsed, codes).foreachPartition(write_partition)
+    return written.value

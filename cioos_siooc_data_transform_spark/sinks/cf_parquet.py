@@ -34,9 +34,14 @@ def write_cf_dataset(
     parsed: DataFrame,
     out_dir: str,
     mode: str = "overwrite",
+    codes: DataFrame | None = None,
 ) -> dict[str, str]:
     """Write the full CF dataset (measurements + variables + headers +
-    catalog). Returns the written paths."""
+    catalog). Returns the written paths.
+
+    ``codes`` is ``assign_bodc_codes(ios_channels(parsed))``; a caller
+    that already built it passes it in so the plan is built once, and it
+    is derived from ``parsed`` when absent."""
     from cioos_siooc_data_transform_spark.operators.bodc import assign_bodc_codes
     from cioos_siooc_data_transform_spark.sources.ios_source import (
         ios_catalog,
@@ -53,14 +58,16 @@ def write_cf_dataset(
         "spark.sql.sources.partitionOverwriteMode", None
     )
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    # the binaryFile scan + Python parse feeds FOUR write actions (and
-    # the cf plan references it three more times) — cache once like the
-    # sibling sinks, or every file re-parses ~6x
-    parsed = parsed.cache()
+    # the binaryFile scan + Python parse feeds FOUR write actions, so the
+    # parse must be cached. The caller owns a cache it passes in: cache
+    # here only when the input is not cached, and release only that.
+    owns_cache = not parsed.is_cached
+    if owns_cache:
+        parsed = parsed.cache()
 
     catalog = ios_catalog(parsed)
-    channels = ios_channels(parsed)
-    codes = assign_bodc_codes(channels)
+    if codes is None:
+        codes = assign_bodc_codes(ios_channels(parsed))
     meas = ios_measurements_masked(parsed)
 
     # CF measurements: only routed channels, keyed by var_code, with the
@@ -70,7 +77,7 @@ def write_cf_dataset(
                   ["file_id", "channel_idx"])
         .join(catalog.select("file_id", "start_ts"), "file_id")
         .withColumn("year", F.year("start_ts"))
-        .select("year", "file_id", "record_idx", "var_code", "value_num")
+        .select("year", "file_id", "record_idx", "channel_idx", "var_code", "value_num")
     )
 
     paths = {
@@ -80,18 +87,26 @@ def write_cf_dataset(
         "catalog": os.path.join(out_dir, "catalog"),
     }
     try:
+        # year leads the sort: the partitioned write requires rows
+        # ordered by year and replaces a sort that does not start with it.
+        # channel_idx makes the layout independent of the join strategy.
         cf.repartition("year").sortWithinPartitions(
-            "file_id", "record_idx"
-        ).write.mode(mode).option("compression", "zstd").partitionBy(
-            "year"
-        ).parquet(paths["measurements"])
-        codes.write.mode(mode).option("compression", "zstd").parquet(
+            "year", "file_id", "record_idx", "channel_idx"
+        ).drop("channel_idx").write.mode(mode).option(
+            "compression", "zstd"
+        ).partitionBy("year").parquet(paths["measurements"])
+        # sized by a shuffle like the measurements: a cached ``codes``
+        # keeps its plan's shuffle partitions, which AQE does not coalesce
+        codes.repartition("file_id").sortWithinPartitions(
+            "file_id", "channel_idx"
+        ).write.mode(mode).option("compression", "zstd").parquet(
             paths["variables"]
         )
         ios_header_json(parsed).write.mode(mode).parquet(paths["headers"])
         catalog.write.mode(mode).parquet(paths["catalog"])
     finally:
-        parsed.unpersist()
+        if owns_cache:
+            parsed.unpersist()
         if prev_overwrite_mode is None:
             spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
         else:

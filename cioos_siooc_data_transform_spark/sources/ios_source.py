@@ -172,25 +172,44 @@ def ios_measurements(parsed: DataFrame) -> DataFrame:
 
 def ios_measurements_masked(parsed: DataFrame) -> DataFrame:
     """Measurements with pad → NULL (P4) using the per-channel pad with
-    file-level fallback (J5 coalesce chain: channel pad → file PAD)."""
-    meas = ios_measurements(parsed)
-    ch = ios_channels(parsed).select("file_id", "channel_idx", "pad")
-    files = parsed.select("file_id", "pad_default")
-    joined = meas.join(ch, ["file_id", "channel_idx"], "left").join(
-        files, "file_id", "left"
+    file-level fallback (J5 coalesce chain: channel pad → file PAD).
+
+    Row-local: each file's channel pads become an array of pad numbers
+    before the explode, and a cell reads its pad by position. The parser
+    sets ``channel_idx`` to the channel's 1-based array position, so this
+    is the join on (file_id, channel_idx) without the join; a cell beyond
+    the declared channels uses the file PAD. A channel pad that is set
+    but not a number masks nothing (it does not fall back)."""
+    file_pad = F.nullif(F.trim(F.col("pad_default")), F.lit(""))
+    channel_pads = F.transform(
+        "channels",
+        lambda c: F.coalesce(F.nullif(F.trim(c["pad"]), F.lit("")), file_pad)
+        .try_cast("double"),
     )
-    pad = F.coalesce(
-        F.nullif(F.trim(F.col("pad")), F.lit("")),
-        F.nullif(F.trim(F.col("pad_default")), F.lit("")),
+    recs = parsed.select(
+        "file_id",
+        channel_pads.alias("_pads"),
+        file_pad.try_cast("double").alias("_file_pad"),
+        F.posexplode("records").alias("record_idx", "cells"),
     )
-    pad_num = pad.try_cast("double")
-    masked = F.when(
-        pad_num.isNotNull() & (F.col("value_num") == pad_num), F.lit(None)
-    ).otherwise(F.col("value_num"))
-    return joined.select(
+    cells = recs.select(
         "file_id",
         "record_idx",
-        "channel_idx",
+        "_pads",
+        "_file_pad",
+        F.posexplode("cells").alias("_pos", "value_str"),
+    )
+    pad_num = F.when(
+        F.col("_pos") < F.size("_pads"), F.get("_pads", F.col("_pos"))
+    ).otherwise(F.col("_file_pad"))
+    value_num = F.col("value_str").try_cast("double")
+    masked = F.when(
+        pad_num.isNotNull() & (value_num == pad_num), F.lit(None)
+    ).otherwise(value_num)
+    return cells.select(
+        "file_id",
+        "record_idx",
+        (F.col("_pos") + 1).alias("channel_idx"),
         "value_str",
         masked.alias("value_num"),
     )

@@ -33,3 +33,33 @@ def test_cf_sink_roundtrip(spark):
         assert spark.read.parquet(paths["measurements"]).count() == n1
         headers = spark.read.parquet(paths["headers"])
         assert headers.count() == 6
+
+
+def _parsed_sample(spark):
+    from cioos_siooc_data_transform_spark.plans.ios_queries import SAMPLE_IOS
+    from cioos_siooc_data_transform_spark.sources.ios_source import parse_ios
+
+    files = spark.createDataFrame(
+        [("memory://sample.ctd", bytearray(SAMPLE_IOS.encode("ascii")))],
+        "path STRING, content BINARY",
+    )
+    return parse_ios(files)
+
+
+def test_cf_sink_leaves_the_callers_cache_alone(spark, tmp_path):
+    """The caller owns a cache it passes in; the sink releases only a
+    cache it created itself."""
+    from cioos_siooc_data_transform_spark.sinks.cf_parquet import write_cf_dataset
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    write_cf_dataset(_parsed_sample(spark), str(tmp_path / "own"))
+    assert cache_manager.isEmpty()
+
+    parsed = _parsed_sample(spark).cache()
+    try:
+        write_cf_dataset(parsed, str(tmp_path / "callers"))
+        assert parsed.is_cached
+        assert parsed.storageLevel.useMemory  # the JVM-side cache entry
+    finally:
+        parsed.unpersist()

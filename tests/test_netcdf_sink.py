@@ -230,3 +230,24 @@ def test_cdf_version_auto_escalation():
     assert _pick_version({"z": 2**29}, [3 * 2**30]) == 2       # > 2 GiB file
     assert _pick_version({"z": 2**30}, [5 * 2**30]) == 5       # > 4 GiB var
     assert _pick_version({"z": 2**32}, [8]) == 5               # 64-bit dim
+
+
+def test_write_netcdf_dir_counts_the_files_it_writes(spark, tmp_path):
+    """One job writes and counts: the return value is the number of .nc
+    files on disk; an error row (no records) writes nothing."""
+    from cioos_siooc_data_transform_spark.plans.ios_queries import SAMPLE_IOS
+    from cioos_siooc_data_transform_spark.sinks.cf_netcdf import write_netcdf_dir
+    from cioos_siooc_data_transform_spark.sources.ios_source import parse_ios
+
+    content = bytearray(SAMPLE_IOS.encode("ascii"))
+    rows = [(f"memory://s{i}.ctd", content) for i in range(3)]
+    bad = SAMPLE_IOS.replace("NUMBER OF CHANNELS  : 3", "NUMBER OF CHANNELS  : 4")
+    rows.append(("memory://broken.ctd", bytearray(bad.encode("ascii"))))
+    parsed = parse_ios(spark.createDataFrame(rows, "path STRING, content BINARY"))
+
+    n = write_netcdf_dir(parsed, str(tmp_path))
+
+    written = sorted(glob.glob(str(tmp_path / "*" / "*.nc")))
+    assert n == 3
+    assert [os.path.basename(p) for p in written] == ["s0.nc", "s1.nc", "s2.nc"]
+    assert {os.path.basename(os.path.dirname(p)) for p in written} == {"2024"}
