@@ -1,5 +1,5 @@
-"""BODC code assignment (SURVEY.md §2.3 J3 + §2.5 W2) and CF variable
-assembly (§2.8 K2).
+"""BODC code assignment (SURVEY.md §2.3 J3 + §2.5 W2), which also gives
+each routed channel the CF variable attributes both sinks write (§2.8 K2).
 
 Reimplements the contract of IDT/OceanNcVar.py:160-258 (__get_bodc_code)
 and IDT/write_ctd_ncfile.py:92-148 as a constant-folded CASE ladder plus a
@@ -152,45 +152,3 @@ def assign_bodc_codes(channels: DataFrame, routing_rules=None) -> DataFrame:
         F.col("maximum").alias("declared_max"),
         F.col("pad"),
     )
-
-
-def cf_variables(parsed: DataFrame, channels: DataFrame) -> DataFrame:
-    """K2: the per-file CF variable table — envelope scalars (lat/lon/
-    time/ids) + routed channels (FIXTURES.md §6).
-
-    Envelope rows fix the reference's longitude standard_name bug."""
-    coded = assign_bodc_codes(channels).select(
-        "file_id",
-        "var_code",
-        "standard_name",
-        "long_name",
-        "units",
-        F.lit("float32").alias("datatype"),
-        F.lit("z").alias("dim"),
-    )
-    envelope_defs = [
-        ("latitude", "latitude", "Latitude", "degrees_north", "float32"),
-        ("longitude", "longitude", "Longitude", "degrees_east", "float32"),
-        ("time", "time", "time", "seconds since 1970-01-01 00:00:00+0000", "double"),
-        ("profile", "profile_id", "Profile ID", "", "str"),
-        ("mission_id", "mission_id", "Mission ID", "", "str"),
-    ]
-    envelope = parsed.select(
-        "file_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(code).alias("var_code"),
-                        F.lit(std).alias("standard_name"),
-                        F.lit(lng).alias("long_name"),
-                        F.lit(units).alias("units"),
-                        F.lit(dt).alias("datatype"),
-                        F.lit("").alias("dim"),
-                    )
-                    for code, std, lng, units, dt in envelope_defs
-                ]
-            )
-        ).alias("v"),
-    ).select("file_id", "v.*")
-    return envelope.unionByName(coded)

@@ -28,9 +28,13 @@ from pyspark.sql import functions as F
 def to_netcdf_bytes(parsed: DataFrame, codes: DataFrame | None = None) -> DataFrame:
     """Parsed IOS rows → (file_id, year, nc_bytes). ``codes`` is
     ``assign_bodc_codes(ios_channels(parsed))``, derived when absent."""
+    from cioos_siooc_data_transform_spark.sources.ios_source import (
+        ios_channels,
+        resolved_pad,
+    )
+
     if codes is None:
         from cioos_siooc_data_transform_spark.operators.bodc import assign_bodc_codes
-        from cioos_siooc_data_transform_spark.sources.ios_source import ios_channels
 
         codes = assign_bodc_codes(ios_channels(parsed))
     cf_vars = (
@@ -44,7 +48,15 @@ def to_netcdf_bytes(parsed: DataFrame, codes: DataFrame | None = None) -> DataFr
             ).alias("cf_vars")
         )
     )
-    enriched = parsed.join(cf_vars, "file_id", "left")
+    # each variable's pad becomes the number its cells are masked with:
+    # the channel pad, else the file PAD — the Parquet sink's rule
+    enriched = parsed.join(cf_vars, "file_id", "left").withColumn(
+        "cf_vars",
+        F.transform(
+            "cf_vars",
+            lambda v: v.withField("pad", resolved_pad(v["pad"], "pad_default")),
+        ),
+    )
 
     def build(batches: Iterator) -> Iterator:
         import numpy as np
@@ -115,11 +127,7 @@ def to_netcdf_bytes(parsed: DataFrame, codes: DataFrame | None = None) -> DataFr
                 ]
                 for v in cf_vars:
                     ci = v["channel_idx"] - 1
-                    pad = (v["pad"] or "").strip()
-                    try:
-                        pad_num = float(pad) if pad else None
-                    except ValueError:
-                        pad_num = None
+                    pad_num = v["pad"]
                     vals = np.full(nrec, np.nan, dtype="f4")
                     for r in range(nrec):
                         try:

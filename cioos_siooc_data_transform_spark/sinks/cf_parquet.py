@@ -50,14 +50,6 @@ def write_cf_dataset(
         ios_measurements_masked,
     )
 
-    spark = parsed.sparkSession
-    # save/restore: mutating the shared session conf would silently
-    # switch every LATER partitioned overwrite in this session from
-    # static (truncate-table) to dynamic semantics
-    prev_overwrite_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", None
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     # the binaryFile scan + Python parse feeds FOUR write actions, so the
     # parse must be cached. The caller owns a cache it passes in: cache
     # here only when the input is not cached, and release only that.
@@ -90,11 +82,15 @@ def write_cf_dataset(
         # year leads the sort: the partitioned write requires rows
         # ordered by year and replaces a sort that does not start with it.
         # channel_idx makes the layout independent of the join strategy.
+        # Dynamic overwrite is a per-write option, so the session conf
+        # (and every other partitioned write in it) stays as it is.
         cf.repartition("year").sortWithinPartitions(
             "year", "file_id", "record_idx", "channel_idx"
         ).drop("channel_idx").write.mode(mode).option(
             "compression", "zstd"
-        ).partitionBy("year").parquet(paths["measurements"])
+        ).option("partitionOverwriteMode", "dynamic").partitionBy("year").parquet(
+            paths["measurements"]
+        )
         # sized by a shuffle like the measurements: a cached ``codes``
         # keeps its plan's shuffle partitions, which AQE does not coalesce
         codes.repartition("file_id").sortWithinPartitions(
@@ -107,16 +103,4 @@ def write_cf_dataset(
     finally:
         if owns_cache:
             parsed.unpersist()
-        if prev_overwrite_mode is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_overwrite_mode
-            )
     return paths
-
-
-def reconcile_outputs(catalog_out: DataFrame, source_files: DataFrame) -> DataFrame:
-    """K3: outputs whose source file vanished (LEFT ANTI on file_id) —
-    callers drop these partitions (IDT/ios_data_transform_script.py:114-121)."""
-    return catalog_out.join(source_files.select("file_id"), "file_id", "left_anti")

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -170,26 +170,38 @@ def ios_measurements(parsed: DataFrame) -> DataFrame:
     )
 
 
+def _blank_to_null(s: Column | str) -> Column:
+    return F.nullif(F.trim(s), F.lit(""))
+
+
+def resolved_pad(channel_pad: Column | str, file_pad: Column | str) -> Column:
+    """The number a channel's cells are masked with (J5 coalesce chain,
+    IDT/write_ctd_ncfile.py:93-101): the channel's CHANNEL DETAIL pad,
+    or the file ``PAD`` when the channel pad is blank. A pad that is set
+    but not a number is NULL and masks nothing (it does not fall back).
+    Both CF sinks mask through this one rule."""
+    return F.coalesce(_blank_to_null(channel_pad), _blank_to_null(file_pad)).try_cast(
+        "double"
+    )
+
+
 def ios_measurements_masked(parsed: DataFrame) -> DataFrame:
     """Measurements with pad → NULL (P4) using the per-channel pad with
-    file-level fallback (J5 coalesce chain: channel pad → file PAD).
+    file-level fallback (``resolved_pad``).
 
     Row-local: each file's channel pads become an array of pad numbers
     before the explode, and a cell reads its pad by position. The parser
     sets ``channel_idx`` to the channel's 1-based array position, so this
     is the join on (file_id, channel_idx) without the join; a cell beyond
     the declared channels uses the file PAD. A channel pad that is set
-    but not a number masks nothing (it does not fall back)."""
-    file_pad = F.nullif(F.trim(F.col("pad_default")), F.lit(""))
+    but not a number masks nothing."""
     channel_pads = F.transform(
-        "channels",
-        lambda c: F.coalesce(F.nullif(F.trim(c["pad"]), F.lit("")), file_pad)
-        .try_cast("double"),
+        "channels", lambda c: resolved_pad(c["pad"], "pad_default")
     )
     recs = parsed.select(
         "file_id",
         channel_pads.alias("_pads"),
-        file_pad.try_cast("double").alias("_file_pad"),
+        _blank_to_null("pad_default").try_cast("double").alias("_file_pad"),
         F.posexplode("records").alias("record_idx", "cells"),
     )
     cells = recs.select(

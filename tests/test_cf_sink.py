@@ -35,12 +35,13 @@ def test_cf_sink_roundtrip(spark):
         assert headers.count() == 6
 
 
-def _parsed_sample(spark):
+def _parsed_sample(spark, year=2024):
     from cioos_siooc_data_transform_spark.plans.ios_queries import SAMPLE_IOS
     from cioos_siooc_data_transform_spark.sources.ios_source import parse_ios
 
+    text = SAMPLE_IOS.replace("PDT 2024/", f"PDT {year}/")
     files = spark.createDataFrame(
-        [("memory://sample.ctd", bytearray(SAMPLE_IOS.encode("ascii")))],
+        [("memory://sample.ctd", bytearray(text.encode("ascii")))],
         "path STRING, content BINARY",
     )
     return parse_ios(files)
@@ -63,3 +64,35 @@ def test_cf_sink_leaves_the_callers_cache_alone(spark, tmp_path):
         assert parsed.storageLevel.useMemory  # the JVM-side cache entry
     finally:
         parsed.unpersist()
+
+
+def test_cf_sink_never_sets_the_session_conf(spark, tmp_path, monkeypatch):
+    """Dynamic partition overwrite is an option of the measurements write,
+    not a session-wide conf that other jobs in the session would see
+    while the sink runs. It still keeps the year partitions it does not
+    rewrite."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from cioos_siooc_data_transform_spark.sinks.cf_parquet import write_cf_dataset
+
+    calls = []
+    real_set, real_unset = RuntimeConfig.set, RuntimeConfig.unset
+
+    def record_set(self, key, value):
+        calls.append(("set", key, value))
+        return real_set(self, key, value)
+
+    def record_unset(self, key):
+        calls.append(("unset", key))
+        return real_unset(self, key)
+
+    monkeypatch.setattr(RuntimeConfig, "set", record_set)
+    monkeypatch.setattr(RuntimeConfig, "unset", record_unset)
+    out = str(tmp_path / "cf")
+    write_cf_dataset(_parsed_sample(spark, 2023), out)
+    write_cf_dataset(_parsed_sample(spark, 2024), out)
+    assert calls == []
+
+    meas = spark.read.parquet(f"{out}/measurements")
+    years = sorted(r["year"] for r in meas.select("year").distinct().collect())
+    assert years == [2023, 2024]

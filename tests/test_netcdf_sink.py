@@ -251,3 +251,33 @@ def test_write_netcdf_dir_counts_the_files_it_writes(spark, tmp_path):
     assert n == 3
     assert [os.path.basename(p) for p in written] == ["s0.nc", "s1.nc", "s2.nc"]
     assert {os.path.basename(os.path.dirname(p)) for p in written} == {"2024"}
+
+
+def test_netcdf_blank_channel_pad_falls_back_to_file_pad(spark):
+    """A channel whose CHANNEL DETAIL pad is blank is masked with the file
+    PAD (J5 coalesce chain), in the NetCDF variable as in the Parquet
+    measurements."""
+    from cioos_siooc_data_transform_spark.plans.ios_queries import SAMPLE_IOS
+    from cioos_siooc_data_transform_spark.sinks.cf_netcdf import to_netcdf_bytes
+    from cioos_siooc_data_transform_spark.sources.ios_source import (
+        ios_measurements_masked,
+        parse_ios,
+    )
+
+    detail = "       2  -99   ' '        8  F       ' '     4"
+    assert detail in SAMPLE_IOS
+    text = SAMPLE_IOS.replace(detail, detail.replace("-99", "   "))
+    parsed = parse_ios(spark.createDataFrame(
+        [("memory://blank-pad.ctd", bytearray(text.encode("ascii")))],
+        "path STRING, content BINARY",
+    ))
+    assert parsed.first()["channels"][1]["pad"] == ""
+
+    masked = ios_measurements_masked(parsed).filter("channel_idx = 2")
+    assert [r["value_num"] for r in masked.orderBy("record_idx").collect()] == [
+        7.1, 8.2, None, 9.9,
+    ]
+    (row,) = to_netcdf_bytes(parsed).collect()
+    temp = read_netcdf3(bytes(row["nc_bytes"]))["variables"]["TEMPS901"]["data"]
+    assert math.isnan(float(temp[2]))
+    assert temp[[0, 1, 3]].tolist() == np.array([7.1, 8.2, 9.9], dtype="f4").tolist()

@@ -59,13 +59,125 @@ def test_batch_write_retry_is_idempotent(spark):
     with tempfile.TemporaryDirectory() as tmp:
         out = os.path.join(tmp, "out")
         profiles = sorted(glob.glob(f"{IDT}/ctd_profile/*.ctd"))[:2]
-        batch = spark.createDataFrame([(p,) for p in profiles], "path string")
-        write_ios_batch(spark, batch, out, batch_id=0)
+        batch = spark.read.format("binaryFile").load(profiles)
+        write_ios_batch(batch, out, batch_id=0)
         first = spark.read.parquet(f"{out}/catalog").count()
-        write_ios_batch(spark, batch, out, batch_id=0)  # simulated retry
+        write_ios_batch(batch, out, batch_id=0)  # simulated retry
         cat = spark.read.parquet(f"{out}/catalog")
         assert cat.count() == first == 2
         assert cat.select("file_id").distinct().count() == 2
+
+
+def _write_sample(path, event, extra_header=b""):
+    """One IOS file from the inline sample, with its own EVENT NUMBER;
+    ``extra_header`` is inserted as raw bytes before the header's end."""
+    from cioos_siooc_data_transform_spark.plans.ios_queries import SAMPLE_IOS
+
+    text = SAMPLE_IOS.replace(
+        "EVENT NUMBER        : 7", f"EVENT NUMBER        : {event}"
+    )
+    head, tail = text.encode("ascii").split(b"*END OF HEADER")
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "wb") as f:
+        f.write(head + extra_header + b"*END OF HEADER" + tail)
+
+
+def _batch_dirs(out):
+    return sorted(d for d in os.listdir(f"{out}/catalog") if d.startswith("batch_id="))
+
+
+def _catalog(spark, out, batch_dirs):
+    return {
+        r["file_id"]: (r["event_number"], r["error"])
+        for d in batch_dirs
+        for r in spark.read.parquet(f"{out}/catalog/{d}").collect()
+    }
+
+
+def test_incremental_ingest_exactly_once_on_fixtures(spark, tmp_path):
+    """Two drains over a nested tree: the second picks up only the file
+    landed after the first; a third drain with nothing new writes no
+    batch."""
+    from cioos_siooc_data_transform_spark.streaming.incremental import (
+        run_incremental_ingest,
+    )
+
+    src, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    for event, rel in [(1, "a/s1.ctd"), (2, "a/b/s2.ctd"), (3, "c/s3.ctd")]:
+        _write_sample(os.path.join(src, rel), event)
+
+    run_incremental_ingest(spark, src, out, ckpt)
+    first = _batch_dirs(out)
+    assert _catalog(spark, out, first) == {
+        "s1": ("1", None), "s2": ("2", None), "s3": ("3", None),
+    }
+
+    _write_sample(os.path.join(src, "a/b/d/s4.ctd"), 4)
+    run_incremental_ingest(spark, src, out, ckpt)
+    second = _batch_dirs(out)
+    new = sorted(set(second) - set(first))
+    assert _catalog(spark, out, new) == {"s4": ("4", None)}
+    cat = spark.read.parquet(f"{out}/catalog")
+    assert cat.count() == cat.select("file_id").distinct().count() == 4
+
+    meas = spark.read.parquet(f"{out}/measurements")
+    assert meas.count() == 4 * 4 * 3  # files x records x channels
+    assert meas.filter(F.col("value_num").isNull()).count() == 4  # the -99 pads
+
+    run_incremental_ingest(spark, src, out, ckpt)
+    assert _batch_dirs(out) == second
+
+
+def test_incremental_ingest_glob_and_non_utf8_bytes(spark, tmp_path):
+    """``path_glob`` keeps non-matching files out of the stream, and a
+    file with bytes that are not UTF-8 in a comment line parses (the
+    parser decodes ASCII and drops the rest, like the reference)."""
+    from cioos_siooc_data_transform_spark.streaming.incremental import (
+        run_incremental_ingest,
+    )
+
+    src, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    _write_sample(os.path.join(src, "x/plain.ctd"), 11)
+    _write_sample(
+        os.path.join(src, "x/y/latin.ctd"), 12,
+        extra_header=b"*COMMENTS\n    caf\xe9 probe \xff note\n\n",
+    )
+    _write_sample(os.path.join(src, "x/skipped.bot"), 13)
+    with open(os.path.join(src, "x", "notes.txt"), "wb") as f:
+        f.write(b"not an IOS file \xff\n")
+
+    run_incremental_ingest(spark, src, out, ckpt, path_glob="*.ctd")
+    assert _catalog(spark, out, _batch_dirs(out)) == {
+        "plain": ("11", None), "latin": ("12", None),
+    }
+    (latin,) = (
+        spark.read.parquet(f"{out}/measurements")
+        .filter(F.col("file_id") == "latin")
+        .groupBy("file_id").count().collect()
+    )
+    assert latin["count"] == 4 * 3
+
+
+def test_batch_write_retry_replaces_on_fixtures(spark, tmp_path):
+    """A retried ``batch_id`` replaces the batch it rewrites: the same
+    binaryFile rows written twice leave one copy."""
+    from cioos_siooc_data_transform_spark.streaming.incremental import (
+        write_ios_batch,
+    )
+
+    src, out = str(tmp_path / "in"), str(tmp_path / "out")
+    paths = [os.path.join(src, f"r{i}.ctd") for i in (1, 2)]
+    for i, p in enumerate(paths):
+        _write_sample(p, 20 + i)
+    batch = spark.read.format("binaryFile").load(paths)
+
+    write_ios_batch(batch, out, batch_id=0)
+    write_ios_batch(batch, out, batch_id=0)  # simulated retry
+
+    assert _batch_dirs(out) == ["batch_id=0"]
+    cat = spark.read.parquet(f"{out}/catalog")
+    assert sorted(r["file_id"] for r in cat.collect()) == ["r1", "r2"]
+    assert spark.read.parquet(f"{out}/measurements").count() == 2 * 4 * 3
 
 
 def test_streaming_tumbling_matches_batch(spark):
